@@ -1,8 +1,8 @@
 #!/usr/bin/env bash
 # Run a graft main class with the same JVM flags build.sbt's forked run
-# uses, but WITHOUT sbt — lets probes run while sbt holds the build lock
+# uses, but WITHOUT sbt — lets a main run while sbt holds the build lock
 # (e.g. a Verify gate in another terminal). Usage:
-#   scripts/run_main.sh graft.tools.FallbackProbe [args...]
+#   scripts/run_main.sh graft.tools.PlanDump [args...]
 # Compile first (sbt -batch compile); this script does not compile.
 set -euo pipefail
 cd "$(dirname "$0")/.."

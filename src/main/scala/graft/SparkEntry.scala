@@ -22,6 +22,20 @@ object SparkEntry {
       MetaQueries.queries ++ MapperQueries.queries ++ SourceQueries.queries ++
       StreamQueries.queries ++ AdvancedQueries.queries ++ AnalyticsQueries.queries ++ SignalQueries.queries ++ GraphQueries.queries ++ CurationQueries.queries ++ CorpusQueries.queries ++ ScaleQueries.queries ++ WeightedQueries.queries
 
+  /** The queries named by a `SPARK_GRAFT_ONLY` filter (comma-separated
+    * query names), sorted by name. An unset or blank filter selects every
+    * query. A name that matches no query throws: a typo must fail the run,
+    * not select nothing and report an empty run as a result. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val names = only.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val all = queries
+    val unknown = names -- all.keySet
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_ONLY names match no query: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.toSeq.filter { case (n, _) => names.isEmpty || names(n) }.sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -5,6 +5,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY=q78_x,q40_y limits the dump to named queries (same
+    // filter as Bench) — local iteration aid; the driver runs the full set.
+    // Resolved before the session starts, so a typo fails fast.
+    val selected = SparkEntry.selected()
     // The library's canonical session factory, so the correctness dump runs
     // under exactly the engine settings users of Sessions.local get — a
     // hand-rolled builder here had already drifted from it (Kryo, explicit
@@ -27,23 +31,16 @@ object Verify {
         "guards set to 0 — declarative fallbacks are primary")
     }
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q78_x,q40_y limits the dump to named queries (same
-    // knob as Bench) — local iteration aid; the driver runs the full set.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // a typo'd name would silently select nothing and read as "0 failures"
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty)
-      System.err.println(
-        s"[verify] SPARK_GRAFT_ONLY names match no query: ${unknown.mkString(", ")}")
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    // A failing query does not stop the dump: every other query is still
+    // written, then the run exits 1 naming the failures.
+    val failed = selected.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -62,5 +59,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

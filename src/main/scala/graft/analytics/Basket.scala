@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * rescans of the distinct projection (supports via a second hash agg,
   * order count via a third) collapse into cheap derivations of the basket
   * arm; AQE exchange reuse shares the one input shuffle across the
-  * consumers. Measured at sf0.1 (BasketBench, min-of-4, late-position
-  * A/B): 0.87s vs the round-11 shape's 0.99s, with a FLAT rep profile
-  * (first execution 0.92s vs the old shape's 1.3-5s ramp) — the
+  * consumers. Measured at sf0.1 (PLANS.md "Round 12", min-of-4,
+  * late-position A/B): 0.87s vs the round-11 shape's 0.99s, with a FLAT
+  * rep profile (first execution 0.92s vs the old shape's 1.3-5s ramp) — the
   * basket-derived arms compile far fewer distinct codegen stages.
   *
   * NULL semantics are unchanged: an order whose only items are NULL still

@@ -282,10 +282,11 @@ object Dedup {
     // shingle array `base` already carries, hashed — derive it MAP-SIDE
     // (transform + sort_array, no exchange) instead of re-aggregating the
     // exploded postings (exchange by id + object-agg collect_list: the
-    // single most expensive marginal stage in the r12 NeardupProbe
-    // decomposition, ~1.0s of the kernel's 2.7s at sf0.1; the map-side
-    // derivation re-runs tokenize+shingle for this arm, but that is a
-    // parallel map stage sharing fanOut's reused exchange — full kernel
+    // single most expensive marginal stage in the r12 kernel
+    // decomposition (OPTIMIZATION_r12.md §2), ~1.0s of the kernel's 2.7s
+    // at sf0.1; the map-side derivation re-runs tokenize+shingle for this
+    // arm, but that is a parallel map stage sharing fanOut's reused
+    // exchange — full kernel
     // 2.62→2.27s same-session, identical 256 pairs). Capped mode keeps the
     // grouped build: its sets must drop the df-capped shingles, which only
     // the posting-level df join knows.
@@ -446,7 +447,8 @@ object Dedup {
     // node set is modest, broadcasting labels spares every propagation
     // round the full-edge exchange (checkpointed tables carry no stats —
     // the static planner would sort-merge): on a 46k-node / 47M-edge graph
-    // (graft.tools.CcStress) the converged run lands at ~12-20s warm,
+    // (PLANS.md "Round 8", connected components at real volume) the
+    // converged run lands at ~12-20s warm,
     // bounded by the per-round scan of the materialized edge list, versus
     // ~50s with the per-round edge shuffle. Node count is round-invariant,
     // so decide once; big node sets keep the shuffle join, which is the

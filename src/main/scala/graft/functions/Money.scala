@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * whole scan: every input double is converted to a `Decimal` object, the
   * sum buffer is a `Decimal`, and the multiply in a discounted-price
   * expression runs in scaled-BigInteger arithmetic — measured 1.01s vs a
-  * 0.23s scan floor on TPC-H Q1's shape at sf0.1 (tools/Q01Probe). But the
+  * 0.23s scan floor on TPC-H Q1's shape at sf0.1 (PLANS.md, "Round 8
+  * (cont.): money aggregation goes long-cents"). But the
   * money columns themselves are exact two-decimal values, so the identical
   * result is available from integer arithmetic: quantize each value ONCE
   * to long cents, sum longs, and only present the total in decimal.

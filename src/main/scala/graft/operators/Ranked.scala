@@ -53,8 +53,8 @@ object Ranked {
     * input bytes the plain partitioned window is strictly cheaper than the
     * decomposition — one exchange + one sort versus a range-sampling pass
     * over the input lineage, a range exchange, a hash exchange, and the
-    * carry join (RangedProbe, sf0.1 events: plain 0.39s vs ranged-32
-    * 1.61s, identical output by definition). 64 MiB is far below what one
+    * carry join (OPTIMIZATION_r12.md §3, sf0.1 events: plain 0.39s vs
+    * ranged-32 1.61s, identical output by definition). 64 MiB is far below what one
     * task sorts comfortably, so the |groups|-task window the decomposition
     * exists to remove is not a cliff below the gate; above it — any real
     * fact table — the ranged path engages unchanged. Estimated from the

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    — single-hop, frontier-seeded anchor, AQE-off/1-partition, pointer-
   *    doubled {2,2,1} — costs the same ~0.75s warm (the floor is the
   *    per-statement recursion machinery, not the round count; see
-  *    tools/Q97Probe), while the driver walk is 0.07s. On a barrier-
+  *    PLANS.md "Round 9", q97 Reach redesign), while the driver walk is 0.07s. On a barrier-
   *    dominated real cluster the gap widens by the per-round barrier cost.
   *
   *  - '''Declarative recursion''' (Spark 4 `WITH RECURSIVE`, UnionLoop)

@@ -247,7 +247,7 @@ object AdvancedQueries {
         // — both filters hit the cached blocks), but the materialization
         // happens inside the one final action instead of three extra
         // eager jobs. Same non-replicated-block recovery semantics as
-        // eager. Same-session A/B (tools/Scd2AB): 1.04 → 0.85s,
+        // eager. Same-session A/B (OPTIMIZATION_r12.md §6): 1.04 → 0.85s,
         // identical 4500 rows.
         // PRECONDITION (r13 note): before h's blocks are cached, the two
         // plan branches reading it may compute its partitions

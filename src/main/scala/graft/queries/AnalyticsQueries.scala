@@ -148,8 +148,8 @@ object AnalyticsQueries {
       // (this graph is structurally ≤ 3·|nations| edges at ANY data
       // scale; only the derivation above grows with the fact table),
       // with the Spark 4 WITH RECURSIVE walk as the distributed
-      // fallback for unbounded graphs. Measured (tools/Q97Probe, warm,
-      // sf0.1): every declarative-recursion variant — single-hop,
+      // fallback for unbounded graphs. Measured (PLANS.md, "Round 9":
+      // q97 Reach redesign; warm, sf0.1): every declarative-recursion variant — single-hop,
       // frontier-seeded anchor, AQE-off/1-partition, pointer-doubled
       // {2,2,1} — costs the same ~0.75s (the floor is per-statement
       // recursion machinery, not round count); the bounded driver walk

@@ -129,7 +129,8 @@ object StreamQueries {
       // default: a stream-stream join keeps 4 state stores per partition,
       // so 32 partitions = 128 store init/commits per micro-batch — pure
       // overhead at this volume. Width 4 (16 stores) measured fastest at
-      // sf0.1 (r12 StreamProbe2: 1.85s vs 2.2s at 8; RocksDB ruled out —
+      // sf0.1 (r12, PLANS.md "Round 12" streaming tuning pass: 1.85s vs
+      // 2.2s at 8; RocksDB ruled out —
       // 2.5-3.0s, its per-store native init dwarfs this state volume). A
       // cloned session scopes the setting to this query (production would
       // set it per stream job the same way).
@@ -231,7 +232,8 @@ object StreamQueries {
     // space dedups inside one watermark horizon.
     "q117_stream_dedup" -> ((outer, dir) => {
       val s = outer.newSession()
-      // State width probed in r12 (StreamProbe3 + bench-harness A/B) and
+      // State width probed in r12 (OPTIMIZATION_r12.md, "Streaming knobs
+      // probed this session": a bare probe loop + bench-harness A/B) and
       // KEPT at 8: the probe's bare loop preferred 4 (1.07 vs 1.54s), but
       // under the bench's methodology — per-rep quiesce (state-store stop,
       // cache clear, GC) — width 8 measured 1.15s vs width 4's 2.19-4.28s

@@ -63,7 +63,7 @@ object Corpus {
     * second exchange of posting-level rows. The repartition also subsumes
     * the old fanOut (the explode runs post-exchange at cluster
     * parallelism even when the corpus is one parquet split). Same-session
-    * A/B in tools/CorpusProbe: q60 0.88→0.82s at sf0.1, identical rows —
+    * A/B (OPTIMIZATION_r12.md §4): q60 0.88→0.82s at sf0.1, identical rows —
     * small here, but the exchange this removes is posting-sized at any
     * scale. */
   def termFrequencies(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -75,8 +75,8 @@ object Corpus {
     // q76 −9%, q91 −15% in r12). Below the small-corpus gate (compressed
     // estimate × 4 decompression factor, the Ranked discipline) keep the
     // r11 fanOut shape; above it take the id-keyed exchange. Crossover
-    // measured in tools/CorpusProbe2 (same-session alternating, parity
-    // true): at 0.57 MiB compressed fanOut wins (q76 0.77 vs 0.90s, q91
+    // measured same-session alternating, parity true (OPTIMIZATION_r13.md
+    // §5): at 0.57 MiB compressed fanOut wins (q76 0.77 vs 0.90s, q91
     // 1.09 vs 1.16); at 5.6 MiB id-keyed already wins (q60 2.45 vs 2.73,
     // q91 2.90 vs 3.48); at 16.6 MiB decisively (q60 2.78 vs 6.05, q76
     // 1.78 vs 3.45). 0 forces id-keyed always (the 100 TB posture, what

@@ -19,6 +19,18 @@ class GatesSpec extends SparkSpec {
     try body finally spark.conf.unset(key)
   }
 
+  /** The keys the cases below set to 0, one case each. A key added to
+    * Gates.All without a case here fails "every gate key has a case". */
+  private val zeroedByCase = Seq(Gates.DedupDriverEdgeLimit,
+    Gates.ReachDriverEdgeLimit, Gates.BasketRescanMaxInputBytes,
+    Gates.GraphDriverEdgeLimit, Gates.RankedSmallInputMaxBytes,
+    Gates.DedupKernelMaxCorpusRows, Gates.CorpusTfSmallInputMaxBytes,
+    Gates.StreamMemoryStateStore)
+
+  test("every gate key has a case that sets it to 0") {
+    assert(Gates.All.toSet -- zeroedByCase == Set.empty[String])
+  }
+
   test("effectiveLimit: session conf wins over the call-site default") {
     assert(Gates.effectiveLimit(spark, Gates.ReachDriverEdgeLimit, 42L) == 42L)
     withConf(Gates.ReachDriverEdgeLimit, "7") {
@@ -110,6 +122,58 @@ class GatesSpec extends SparkSpec {
         "gate=0 must force the range-partitioned decomposition")
       assert(twin.select("id", "rn").collect().toSet ==
         fast.select("id", "rn").collect().toSet)
+    }
+  }
+
+  test("embeddingNearDups: zeroing the corpus-row guard forces the BNLJ twin") {
+    val rows = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.001)),
+      (3L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
+    val fast = graft.dedup.Dedup.embeddingNearDups(rows, "vec_id", "embedding", 0.9)
+    assert(fast.queryExecution.executedPlan.toString.contains("MapPartitions"),
+      "tiny corpus must take the broadcast kernel by default")
+    withConf(Gates.DedupKernelMaxCorpusRows, "0") {
+      val twin = graft.dedup.Dedup.embeddingNearDups(rows, "vec_id", "embedding", 0.9)
+      assert(!twin.queryExecution.executedPlan.toString.contains("MapPartitions"),
+        "guard=0 must force the declarative twin")
+      assert(twin.collect().toSet == fast.collect().toSet)
+    }
+  }
+
+  test("termFrequencies: zeroing the small-corpus gate forces the id-keyed exchange") {
+    val docs = Seq((1L, "a b a"), (2L, "b c"), (3L, "")).toDF("doc_id", "text")
+    def idKeyed(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("hashpartitioning(doc_id")
+    val fast = graft.text.Corpus.termFrequencies(docs, "doc_id", "text")
+    assert(!idKeyed(fast), "tiny corpus must keep the fanOut shape by default")
+    withConf(Gates.CorpusTfSmallInputMaxBytes, "0") {
+      val twin = graft.text.Corpus.termFrequencies(docs, "doc_id", "text")
+      assert(idKeyed(twin), "gate=0 must repartition documents by id")
+      assert(twin.collect().toSet == fast.collect().toSet)
+    }
+  }
+
+  test("stream queries: zeroing the memory-store gate restores the durable provider") {
+    // The provider choice is not in the plan; the checkpoint shows it: the
+    // durable default provider commits each state version as a .delta
+    // file, the process-memory provider writes none.
+    def deltaFiles(): Set[String] = {
+      val root = java.nio.file.Paths.get(Scratch.checkpointBase)
+      val walk = java.nio.file.Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.map(_.toString).filter(_.endsWith(".delta")).toSet
+      } finally walk.close()
+    }
+    val q117 = graft.queries.StreamQueries.queries("q117_stream_dedup")
+    val before = deltaFiles()
+    val memory = q117(spark, sf).collect().toSet
+    assert(memory.nonEmpty)
+    assert(deltaFiles() == before, "default gate must keep state in memory")
+    withConf(Gates.StreamMemoryStateStore, "0") {
+      val durable = q117(spark, sf).collect().toSet
+      assert((deltaFiles() -- before).nonEmpty,
+        "gate=0 must commit state through the durable provider")
+      assert(durable == memory)
     }
   }
 }

@@ -237,7 +237,7 @@ class DedupSpec extends SparkSpec {
       (3L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
     val viaKernel = Dedup.embeddingNearDups(rows, "vec_id", "embedding", 0.9)
     assert(viaKernel.queryExecution.executedPlan.toString.contains("MapPartitions"))
-    spark.conf.set("spark.graft.dedup.kernelMaxCorpusRows", "1")
+    spark.conf.set(graft.core.Gates.DedupKernelMaxCorpusRows, "1")
     try {
       val exact = Dedup.embeddingNearDups(rows, "vec_id", "embedding", 0.9)
       assert(!exact.queryExecution.executedPlan.toString.contains("MapPartitions"),
@@ -250,7 +250,7 @@ class DedupSpec extends SparkSpec {
       assert(ivf.collect().toSet ==
         Dedup.embeddingNearDupsIvfJoin(rows, centroids, 0.9, "vec_id", "embedding")
           .collect().toSet)
-    } finally spark.conf.unset("spark.graft.dedup.kernelMaxCorpusRows")
+    } finally spark.conf.unset(graft.core.Gates.DedupKernelMaxCorpusRows)
   }
 
   test("embeddingNearDups: null vector ELEMENTS score like the twin (0.0 slots)") {
@@ -468,13 +468,13 @@ class DedupSpec extends SparkSpec {
     val centroids = Array((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)))
     val viaKernel = Dedup.semanticDedupIvf(rows, centroids, 0.9)
     assert(viaKernel.queryExecution.executedPlan.toString.contains("MapPartitions"))
-    spark.conf.set("spark.graft.dedup.kernelMaxCorpusRows", "1")
+    spark.conf.set(graft.core.Gates.DedupKernelMaxCorpusRows, "1")
     try {
       val twin = Dedup.semanticDedupIvf(rows, centroids, 0.9)
       assert(!twin.queryExecution.executedPlan.toString.contains("MapPartitions"),
         "guard must route past-limit corpora to the join twin")
       assert(twin.collect().toSet == viaKernel.collect().toSet)
-    } finally spark.conf.unset("spark.graft.dedup.kernelMaxCorpusRows")
+    } finally spark.conf.unset(graft.core.Gates.DedupKernelMaxCorpusRows)
     // TOCTOU backstop: the accounting collect itself is limit-bounded
     val k = rows.select(col("vec_id"), lit(0L).as("key"),
       transform(col("embedding"), x => coalesce(x, lit(0.0))).as("v"))

@@ -231,7 +231,7 @@ class PlanRegressionSpec extends AnyFunSuite {
     // before the explode — one document-sized exchange serves the tf agg
     // and the per-doc window. Below it (the default at test sf) the
     // repartition must NOT appear: the local fanOut shape's narrow
-    // aggregated exchanges win at this size (CorpusProbe2).
+    // aggregated exchanges win at this size (OPTIMIZATION_r13.md §5).
     spark.conf.set(graft.core.Gates.CorpusTfSmallInputMaxBytes, "0")
     val idKeyed = try plan("q60_tfidf")
     finally spark.conf.unset(graft.core.Gates.CorpusTfSmallInputMaxBytes)
@@ -313,7 +313,8 @@ class PlanRegressionSpec extends AnyFunSuite {
   }
 
   test("q111: quadratic pair expansion runs once; small consumers rescan, not cache") {
-    // Round-8 shape (BasketBench, min-of-4 at sf0.1): below the
+    // Round-8 shape (PLANS.md "Round 8", q111 redesign, min-of-4 at
+    // sf0.1): below the
     // materialization gate the plan must NOT cache — the block-manager
     // write made the cold execution 6-7× slower than letting Catalyst
     // slice the three consumers, each column-pruned and partial-agged.
@@ -498,8 +499,8 @@ class PlanRegressionSpec extends AnyFunSuite {
 
   test("q01/q57: the aggregate over the fact scan is long partials, never decimal") {
     // functions.Money's two-stage shape: the hot loop over lineitem sums
-    // LONGS (decimal-typed aggregation costs ~4x the scan — tools/
-    // Q01Probe); decimal appears only in the combine over the tiny
+    // LONGS (decimal-typed aggregation costs ~4x the scan — PLANS.md,
+    // "Round 8 (cont.): money aggregation"); decimal appears only in the combine over the tiny
     // partial set. A refactor that reintroduces sum(decimal) over the
     // scan fails here.
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
