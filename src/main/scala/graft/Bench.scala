@@ -105,13 +105,12 @@ object Bench {
     // runs, resolved before the session starts so a typo fails fast.
     val selected = SparkEntry.selected()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
     // Canonical session factory (Sessions.local): the benchmark must time
     // the engine under the same settings Verify's oracle dump and library
     // users run with — three hand-rolled builders had already drifted
-    // (Kryo and the explicit AQE flags were in Sessions.local only).
-    val spark = graft.core.Sessions.local(appName = "graft-bench", cores = cpus)
+    // (Kryo and the explicit AQE flags were in Sessions.local only). Its
+    // default core count reads SPARK_GRAFT_CPUS, else every processor.
+    val spark = graft.core.Sessions.local(appName = "graft-bench")
     graft.core.Scratch.cleanStale()
 
     // min-of-N: a transient CPU-contention spike during one execution (GC,

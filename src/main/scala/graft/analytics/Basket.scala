@@ -31,19 +31,12 @@ import org.apache.spark.sql.functions._
   * manager write on the hot path); below the gate, letting Catalyst slice
   * the plan per consumer wins. At warehouse scale the trade flips: re-
   * scanning a 100 TB fact per consumer is multiple input shuffles instead
-  * of one, so once the summed LEAF input size crosses
-  * [[RescanMaxInputBytes]] the basket table — one row per order, far
-  * smaller than the fact — is materialized once with an eager
-  * localCheckpoint and every consumer reads it. */
+  * of one, so once the summed LEAF input size crosses the
+  * [[graft.core.Gates.BasketRescanMaxInputBytes]] byte gate the basket
+  * table — one row per order, far smaller than the fact — is
+  * materialized once with an eager localCheckpoint and every consumer
+  * reads it. */
 object Basket {
-
-  /** Input size above which the basket table is materialized once instead
-    * of re-derived per consumer. Rescanning is strictly faster below
-    * ~1 GiB on measured hardware (the shuffle being shared is at most
-    * input-sized, and the block-manager write it avoids is comparable to
-    * the shuffle itself); above it, one materialization amortizes across
-    * the three consumers. */
-  private val RescanMaxInputBytes = BigInt(1L << 30)
 
   /** Co-purchase pairs (pa < pb) with support and integer-ppm lift:
     * lift = P(ab) / (P(a)·P(b)) = n_ab·N / (n_a·n_b), emitted as
@@ -70,15 +63,10 @@ object Basket {
     // case this branch serves.
     val inputBytes = df.queryExecution.analyzed.collectLeaves()
       .map(_.stats.sizeInBytes).sum
-    // Session override (spark.graft.basket.rescanMaxInputBytes) beats the
-    // built-in threshold — setting it to 0 forces the at-scale
-    // materialization path (the all-twins gate's posture).
-    val gate = BigInt(graft.core.Gates.effectiveLimit(df.sparkSession,
-      graft.core.Gates.BasketRescanMaxInputBytes,
-      RescanMaxInputBytes.toLong))
     val baskets =
-      if (inputBytes > gate) baskets0.localCheckpoint()
-      else baskets0
+      if (graft.core.Gates.within(df.sparkSession,
+          graft.core.Gates.BasketRescanMaxInputBytes, inputBytes)) baskets0
+      else baskets0.localCheckpoint()
     // Pair generation stays in codegen'd generators (posexplode + slice
     // explode), not array HOFs: measured ~2× faster at sf0.1, and resident
     // memory per task is O(basket) — the slice for outer position ki is

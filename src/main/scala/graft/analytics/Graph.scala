@@ -99,7 +99,7 @@ object Graph {
     // one collected buffer (no second evaluation, no TOCTOU): integral
     // node ids, every (src, dst, w) non-null — the distributed loop gives
     // NULL keys/weights its join/agg semantics, which the kernel does not
-    // reimplement — and the edge count under the session-overridable guard.
+    // reimplement — and the edge count within the driver edge gate.
     val srcT = e.schema("src").dataType
     val dstT = e.schema("dst").dataType
     // srcT == dstT keeps the kernel's output node type identical to the
@@ -108,24 +108,21 @@ object Graph {
       t == org.apache.spark.sql.types.LongType ||
         t == org.apache.spark.sql.types.IntegerType ||
         t == org.apache.spark.sql.types.ShortType)
-    val lim = math.min(graft.core.Gates.effectiveLimit(edges.sparkSession,
-      graft.core.Gates.GraphDriverEdgeLimit, 2000000L),
-      (Int.MaxValue - 1).toLong) // a raised guard must not wrap limit+1
-    // Gate on a cheap count() BEFORE collecting (r13, dupClusters' pattern):
-    // the limit(lim+1) collect alone would pull up to lim+1 rows (default
-    // 2,000,001 × 4 long cols — a multi-hundred-MB transient driver
-    // allocation) for every integral-typed graph just to discover an
-    // oversize graph doesn't qualify. `e` is localCheckpoint'd (immutable),
-    // so count-then-collect has no TOCTOU and the collect runs only when
-    // the kernel will actually be attempted.
-    if (integral && lim > 0 && e.count() <= lim) {
-      val buf = e.select(col("src").cast("long"), col("dst").cast("long"),
-          col("w"), col("outw"))
-        .collect()
-      val clean =
-        buf.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) &&
-          !r.isNullAt(3))
-      if (clean) {
+    // Gate on the row gate's count probe BEFORE collecting (r13): a bare
+    // bounded collect would pull up to limit+1 rows (default 2,000,001 ×
+    // 4 long cols — a multi-hundred-MB transient driver allocation) for
+    // every integral-typed graph just to discover an oversize graph
+    // doesn't qualify. `e` is localCheckpoint'd (immutable), so the
+    // collect runs only when the kernel will actually be attempted.
+    val gate = graft.core.Gates.DriverEdgeLimit
+    val collected =
+      if (integral && graft.core.Gates.rowsWithin(e, gate))
+        graft.core.Gates.collectWithin(e.select(col("src").cast("long"),
+          col("dst").cast("long"), col("w"), col("outw")), gate)
+      else None
+    collected match {
+      case Some(buf) if buf.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
+          !r.isNullAt(2) && !r.isNullAt(3)) =>
         val spark = edges.sparkSession
         import spark.implicits._
         val nodeSet = scala.collection.mutable.SortedSet.empty[Long]
@@ -160,7 +157,7 @@ object Graph {
         return nodeSet.iterator.map(n => (n, pr(n).toLong)).toSeq
           .toDF("node", "pr_ppm")
           .select(col("node").cast(srcT).as("node"), col("pr_ppm"))
-      }
+      case _ =>
     }
     // Derive nodes from the MATERIALIZED e, not e0 — reading e0 again
     // would re-run the caller's whole edge derivation a second time.

@@ -372,8 +372,7 @@ object Dedup {
     * plan doesn't grow with rounds (the classic iterative-algorithm trap).
     */
   def dupClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                  maxIter: Int = 20,
-                  driverEdgeLimit: Long = 2000000L): DataFrame = {
+                  maxIter: Int = 20): DataFrame = {
     // Materialize the edge list once — every propagation round joins it,
     // and without the checkpoint each round would re-execute the (often
     // expensive) pair-generation plan feeding this operator. Near-dup edge
@@ -403,18 +402,15 @@ object Dedup {
     // exact same output (component min = canonical survivor, enforced by
     // union-by-min), at the cost of one task instead of ~5 stages. The
     // distributed propagation below remains the path for genuinely large
-    // edge sets (threshold overridable per call).
+    // edge sets (past the driver edge gate). The full count above is the
+    // gate's size — it also sizes the propagation's partitions — and `p0`
+    // is checkpointed, so the collect cannot see more rows than it counted.
     val srcType = edges0.schema("src").dataType
     val integral = srcType == org.apache.spark.sql.types.LongType ||
       srcType == org.apache.spark.sql.types.IntegerType ||
       srcType == org.apache.spark.sql.types.ShortType
-    // Session override (spark.graft.dedup.driverEdgeLimit) beats the call
-    // parameter: lets a whole suite force the distributed path (the
-    // all-twins gate) without threading a knob through every caller.
-    val effectiveLimit = graft.core.Gates.effectiveLimit(
-      pairs.sparkSession, graft.core.Gates.DedupDriverEdgeLimit,
-      driverEdgeLimit)
-    if (integral && nEdges <= effectiveLimit) {
+    if (integral && graft.core.Gates.within(pairs.sparkSession,
+        graft.core.Gates.DriverEdgeLimit, nEdges)) {
       val spark = pairs.sparkSession
       import spark.implicits._
       val es = p0.select(col("src").cast("long"), col("dst").cast("long"))
@@ -504,94 +500,45 @@ object Dedup {
   // ---- embedding-cosine near-dup -----------------------------------------
 
   /** Embedding-cosine near-duplicate pairs: every (a < b) pair with cosine
-    * similarity >= `threshold`. Exact all-pairs via a broadcast nested-loop
-    * join — the correctness baseline, O(n²) scores but zero shuffle of the
+    * similarity >= `threshold`. Exact all-pairs: under the
+    * [[graft.core.Gates.DedupKernelMaxCorpusRows]] row gate (bigint ids
+    * only) the broadcast [[pairScoreKernel]] scores them; past it the
+    * declarative BNLJ twin runs — O(n²) scores but zero shuffle of the
     * corpus (the smaller side broadcasts). For the 100 TB shape, cut the
     * pair space first: [[graft.similarity.Similarity.ivfAssign]] and compare
     * only within a cluster ([[embeddingNearDupsIvf]]), or LSH-bucket by
     * hyperplane signs — both trade recall near the threshold boundary. */
-  /** Corpus-row guard for the broadcast-kernel paths of
-    * [[embeddingNearDups]] and [[embeddingNearDupsIvf]]. Honest footprint
-    * at the 500k ceiling, dim 64: ~256 MB of primitive doubles collected
-    * (the typed collect yields `Array[Double]`s, not boxed rows) plus one
-    * serialized broadcast copy — ~0.5-0.8 GB transient on the driver, the
-    * same posture as `driverEdgeLimit`. Above it (or for non-bigint ids)
-    * the declarative twins (BNLJ / cluster-keyed shuffle join) run
-    * instead. Tunable per session via `spark.graft.dedup.kernelMaxCorpusRows`
-    * (size it to the driver heap on a real cluster; also how the specs
-    * drive the past-guard branch without a 500k-row fixture). */
-  val KernelMaxCorpusRows = 500000
-
-  private def kernelMaxCorpusRows(df: DataFrame): Int =
-    // clamped below Int.MaxValue: the probes use limit(max + 1), and a
-    // session RAISING the guard to Int.MaxValue (the scaladoc's "size it
-    // to the driver heap" advice) would otherwise wrap negative and make
-    // Dataset.limit throw — a guard meant to be raised must not crash
-    // when raised
-    math.min(graft.core.Gates.effectiveLimit(df.sparkSession,
-        graft.core.Gates.DedupKernelMaxCorpusRows, KernelMaxCorpusRows.toLong),
-      (Int.MaxValue - 1).toLong).toInt
-
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
                         threshold: Double): DataFrame = {
     // Double-gated: the cheap id-only probe routes obviously-oversized
     // corpora to the twin without shipping vectors; the kernel's own
-    // limit(max+1) collect then re-checks at materialization time, so an
+    // bounded collect then re-checks at materialization time, so an
     // input whose re-evaluation grows past the guard (non-deterministic
     // source, TOCTOU) degrades to the twin instead of an unbounded
-    // driver collect.
+    // driver collect. No fanOut on the kernel side: the O(n²) loop runs
+    // on the kernel's index-range stream at range parallelism regardless
+    // of the scan's split count, and the collect only evaluates the
+    // cast/coalesce projection — not worth a corpus-wide shuffle.
     val kernel =
-      if (fitsKernel(df, idCol)) embeddingNearDupsKernel(df, idCol, vecCol, threshold)
+      if (fitsKernel(df, idCol))
+        pairScoreKernel(df.select(col(idCol).cast("long"), kernelVec(col(vecCol))),
+          threshold)
       else None
     kernel.getOrElse(embeddingNearDupsBnlj(df, idCol, vecCol, threshold))
   }
 
-  /** Kernel guard probe. Only the id column goes through the limit+count
-    * (the decision needs a row count, not the vectors — probing the full
-    * rows would ship up to n·dim doubles through the single-partition
-    * CollectLimit just to produce one boolean). */
-  private def fitsKernel(df: DataFrame, idCol: String): Boolean = {
-    val max = kernelMaxCorpusRows(df)
+  /** Kernel row-gate probe. Only the id column goes through the
+    * limit+count (the decision needs a row count, not the vectors —
+    * probing the full rows would ship up to n·dim doubles through the
+    * single-partition CollectLimit just to produce one boolean). */
+  private def fitsKernel(df: DataFrame, idCol: String): Boolean =
     df.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
-      df.select(col(idCol)).limit(max + 1).count() <= max
-  }
-
-  /** Broadcast-corpus pair kernel: one `mapPartitions` over an index
-    * range scores each collected row against the broadcast (id, vector,
-    * norm) arrays in a primitive-double loop, emitting only
-    * near-threshold pairs. The BNLJ
-    * twin below is ~30× more per-pair overhead, all row plumbing: every
-    * joined pair materializes BOTH 64-double vectors into an output row
-    * (~1 KB copied per pair) before the dot runs — measured 2.38s vs
-    * 0.35s at 2k vectors and 8.0s vs 1.1s at 20k, identical rows.
-    *
-    * Bit-exactness with the twin (and so with the DuckDB oracle): the
-    * while-loop accumulates `s += a(i)*b(i)` in element order — the same
-    * IEEE op sequence as `DotProduct`'s generated loop — norms are
-    * `sqrt(seq-dot)` once per row as in the twin, the raw cosine is
-    * `dot / (na * nb)`, and the final 6-dp rounding is applied by Spark's
-    * own `round` ON TOP of the kernel output, so rounding semantics are
-    * shared by construction. The in-kernel prefilter keeps pairs with raw
-    * cosine ≥ threshold − 1e-6: 6-dp HALF_UP rounding moves a value by at
-    * most 5e-7 (+1 ulp), so no pair the rounded filter would keep is ever
-    * dropped; the exact filter then runs on the rounded column.
-    * Parity (kernel ≡ BNLJ, exact equality) is spec-gated in
-    * DedupSimilaritySpec. */
-  private def embeddingNearDupsKernel(df: DataFrame, idCol: String,
-                                      vecCol: String,
-                                      threshold: Double): Option[DataFrame] = {
-    // No fanOut here (unlike the pre-round-12 shape): the O(n²) loop runs
-    // on the kernel's index-range stream at range parallelism regardless
-    // of the scan's split count, and the collect side only evaluates the
-    // cast/coalesce projection — not worth a corpus-wide shuffle.
-    val k = df.select(col(idCol).cast("long"), lit(0L), kernelVec(col(vecCol)))
-    pairScoreKernel(k, threshold, kernelMaxCorpusRows(df))
-  }
+      graft.core.Gates.rowsWithin(df.select(col(idCol)),
+        graft.core.Gates.DedupKernelMaxCorpusRows)
 
   /** [start, end) bounds of each equal-key run in an already-sorted key
-    * array, aligned per row — the group index both broadcast kernels scan
-    * ([[pairScoreKernel]] and [[semanticDedupAccounting]] share this so
-    * their grouping cannot diverge). */
+    * array, aligned per row — the cluster index
+    * [[semanticDedupAccounting]] scans. */
   private def keyGroupBounds(keys: Array[Long]): (Array[Int], Array[Int]) = {
     val n = keys.length
     val gs = new Array[Int](n)
@@ -617,37 +564,61 @@ object Dedup {
     s
   }
 
-  /** Shared broadcast pair kernel over a KEYED corpus. The input must
-    * project exactly (id: long, key: long, vec: array<double>); it is
-    * collected ONCE (bounded, below) and serves both sides of the
-    * self-pairing — the broadcast carries flat sorted-by-key arrays with
-    * per-row group bounds, and the distributed stream is `spark.range`
-    * over row indices, so tasks ship nothing but range bounds and the
-    * pair loop runs at range parallelism independent of the source
-    * scan's split count. Pairs are scored only within equal `key` (the
-    * exact all-pairs path passes a constant key, the IVF path passes
-    * cluster_id), `id_a < id_b`, cosine prefiltered at threshold − 1e-6
-    * in the kernel and exact-filtered on the Spark-rounded column — see
-    * [[embeddingNearDupsKernel]]'s scaladoc for the bit-exactness
-    * argument.
+  /** Kernel-side vector projection: cast to double and zero null ELEMENTS.
+    * The declarative twins' `DotProduct` fold reads a null array slot as
+    * 0.0 (UnsafeArrayData zeroes the value region), so the coalesce keeps
+    * the kernel bit-identical on dirty vectors instead of NPE-ing in the
+    * encoder — and it makes the element type non-nullable, so the typed
+    * collect materializes primitive `Array[Double]`s, not boxed. */
+  private def kernelVec(c: Column): Column =
+    transform(c, x => coalesce(x.cast("double"), lit(0.0)))
+
+  /** Broadcast-corpus pair kernel. The input must project exactly (id:
+    * long, vec: array<double>); it is collected ONCE through the
+    * [[graft.core.Gates.DedupKernelMaxCorpusRows]] row gate's bounded
+    * collect (None past it → the caller's twin) and serves both sides of
+    * the self-pairing: the broadcast carries flat (id, vector, norm)
+    * arrays, and the distributed stream is `spark.range` over row
+    * indices, so tasks ship nothing but range bounds, the pair loop runs
+    * at range parallelism independent of the source scan's split count,
+    * and the stream cannot diverge from the corpus under a
+    * non-deterministic source — it IS the collected corpus. Each row is
+    * scored in a primitive-double loop against every higher id, emitting
+    * only near-threshold pairs. The BNLJ twin is ~30× more per-pair
+    * overhead, all row plumbing: every joined pair materializes BOTH
+    * 64-double vectors into an output row (~1 KB copied per pair) before
+    * the dot runs — measured 2.38s vs 0.35s at 2k vectors and 8.0s vs
+    * 1.1s at 20k, identical rows.
     *
-    * '''Zero-norm semantics (defined once, all three engines agree)''':
-    * a pair whose norm product is ZERO (an all-zero or all-null-element
-    * vector) is DROPPED — the DuckDB oracle's division by zero yields
-    * NULL, which its `>= threshold` filter removes. The kernel tests the
-    * divisor explicitly; the twins divide with `try_divide` (NULL exactly
-    * when the divisor is 0, the same IEEE division otherwise — also what
-    * keeps ANSI mode from throwing DIVIDE_BY_ZERO mid-join). A pair whose
-    * cosine is NaN with a NONZERO divisor (NaN vector elements) is KEPT:
-    * NaN propagates through both engines' division and orders greater
-    * than every double in both engines' comparisons. Both cases are
-    * parity spec-gated in DedupSimilaritySpec.
+    * Bit-exactness with the twin (and so with the DuckDB oracle): the
+    * while-loop accumulates `s += a(i)*b(i)` in element order — the same
+    * IEEE op sequence as `DotProduct`'s generated loop — norms are
+    * `sqrt(seq-dot)` once per row as in the twin, the raw cosine is
+    * `dot / (na * nb)`, and the final 6-dp rounding is applied by Spark's
+    * own `round` ON TOP of the kernel output, so rounding semantics are
+    * shared by construction. The in-kernel prefilter keeps pairs with raw
+    * cosine ≥ threshold − 1e-6: 6-dp HALF_UP rounding moves a value by at
+    * most 5e-7 (+1 ulp), so no pair the rounded filter would keep is ever
+    * dropped; the exact filter then runs on the rounded column. Parity
+    * (kernel ≡ BNLJ, exact equality) is spec-gated in DedupSimilaritySpec.
     *
-    * '''Guard at materialization time''': the driver collect is bounded by
-    * `limit(maxRows + 1)` — if the corpus re-evaluates larger than the
-    * dispatch-time probe saw (non-deterministic source), the kernel
-    * returns None and the caller's declarative twin runs, instead of an
-    * unbounded collect landing on the driver.
+    * '''Zero-norm semantics (defined once, all engines agree)''': a pair
+    * whose norm product is ZERO (an all-zero or all-null-element vector)
+    * is DROPPED — the DuckDB oracle's division by zero yields NULL, which
+    * its `>= threshold` filter removes. The kernel tests the divisor
+    * explicitly; the twins divide with `try_divide` (NULL exactly when the
+    * divisor is 0, the same IEEE division otherwise — also what keeps ANSI
+    * mode from throwing DIVIDE_BY_ZERO mid-join). A pair whose cosine is
+    * NaN with a NONZERO divisor (NaN vector elements) is KEPT: NaN
+    * propagates through both engines' division and orders greater than
+    * every double in both engines' comparisons. Both cases are parity
+    * spec-gated in DedupSimilaritySpec.
+    *
+    * Whole-null id/vector rows: the declarative twins drop them silently
+    * (a null id fails the `<` join condition, a null vector yields a null
+    * cosine the threshold filter removes); na.drop gives the kernel the
+    * same semantics instead of an encoder NPE. Null ELEMENTS are handled
+    * by [[kernelVec]] in the caller's projection.
     *
     * '''Broadcast lifecycle''': the broadcast is captured by the returned
     * plan's mapPartitions closure and must outlive it (the DataFrame is
@@ -656,89 +627,53 @@ object Dedup {
     * handle — becomes unreachable and ContextCleaner reclaims the blocks
     * at the next GC (Bench's per-query quiesce forces one; long-lived
     * sessions get it from ordinary GC pressure). */
-  /** Kernel-side vector projection: cast to double and zero null ELEMENTS.
-    * The declarative twins' `DotProduct` fold reads a null array slot as
-    * 0.0 (UnsafeArrayData zeroes the value region), so the coalesce keeps
-    * the kernel bit-identical on dirty vectors instead of NPE-ing in the
-    * encoder — and it makes the element type non-nullable, so the typed
-    * collect below materializes primitive `Array[Double]`s, not boxed. */
-  private def kernelVec(c: Column): Column =
-    transform(c, x => coalesce(x.cast("double"), lit(0.0)))
-
-  private[graft] def pairScoreKernel(corpusKeyed: DataFrame,
-                                     threshold: Double,
-                                     maxRows: Int): Option[DataFrame] = {
-    val spark = corpusKeyed.sparkSession
+  private[graft] def pairScoreKernel(corpus: DataFrame,
+                                     threshold: Double): Option[DataFrame] = {
+    val spark = corpus.sparkSession
     import spark.implicits._
-    // Whole-null id/vector rows: the declarative twins drop them silently
-    // (a null id fails the `<` join condition, a null vector yields a null
-    // cosine the threshold filter removes); na.drop gives the kernel the
-    // same semantics instead of an encoder NPE. Null ELEMENTS are handled
-    // by [[kernelVec]] in the callers' projections.
-    //
-    // (The guard limit's collect launches partition batches incrementally
-    // — 1, then 4×, … — which costs ~25ms of extra latency rounds at
-    // sf0.1 vs forcing one round via spark.sql.limit.initialNumPartitions.
-    // That knob is SESSION-scoped though: setting/restoring it here would
-    // race concurrent queries and concurrent kernel calls on the same
-    // session — a library must not mutate shared session state for a
-    // 25ms micro-win, so the default incremental behavior stands.)
-    val collected = corpusKeyed.na.drop("any")
-      .limit(maxRows + 1).as[(Long, Long, Array[Double])].collect()
-    if (collected.length > maxRows) return None // grew past the guard → twin
-    // ONE flat broadcast, sorted by key with per-row group bounds; the
-    // stream side is `spark.range` over row INDICES. Tasks carry nothing
-    // but range bounds — the vectors ride the broadcast that was needed
-    // anyway — the pair loop runs at range parallelism even when the
-    // source scan was single-split, and the stream cannot diverge from
-    // the corpus under a non-deterministic source: it IS the collected
-    // corpus. (The previous two-sided shape re-evaluated the input plan a
-    // second time for the stream rows, which is also why the IVF caller
-    // had to eagerly localCheckpoint its assignment — and left that
-    // checkpoint stranded when this guard returned None.)
-    val sorted = collected.sortBy(_._2)
-    val ids = sorted.map(_._1)
-    val vecs = sorted.map(_._3)
-    val norms = vecs.map(v => math.sqrt(seqDot(v, v)))
-    val n = sorted.length
-    val (groupStart, groupEnd) = keyGroupBounds(sorted.map(_._2))
-    val bc = spark.sparkContext.broadcast((ids, vecs, norms, groupStart, groupEnd))
-    val pre = threshold - 1e-6
-    val pairs = spark.range(n.toLong)
-      .mapPartitions { it =>
-        val (cIds, cVecs, cNorms, gs, ge) = bc.value
-        it.flatMap { iL =>
-          val i = iL.toInt
-          val ida = cIds(i)
-          val va = cVecs(i)
-          val na = cNorms(i)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-          var j = gs(i)
-          while (j < ge(i)) {
-            if (cIds(j) > ida) {
-              val d = na * cNorms(j)
-              // d == 0 → drop (oracle's /0 = NULL); d is NaN → != 0,
-              // divide, and keep the NaN cosine (oracle keeps NaN).
-              // See the zero-norm paragraph above.
-              if (d != 0.0) {
-                val c = seqDot(va, cVecs(j)) / d
-                if (c >= pre || java.lang.Double.isNaN(c))
-                  out += ((ida, cIds(j), c))
+    graft.core.Gates.collectWithin(
+      corpus.na.drop("any").as[(Long, Array[Double])],
+      graft.core.Gates.DedupKernelMaxCorpusRows).map { collected =>
+      val ids = collected.map(_._1)
+      val vecs = collected.map(_._2)
+      val norms = vecs.map(v => math.sqrt(seqDot(v, v)))
+      val bc = spark.sparkContext.broadcast((ids, vecs, norms))
+      val pre = threshold - 1e-6
+      spark.range(collected.length.toLong)
+        .mapPartitions { it =>
+          val (cIds, cVecs, cNorms) = bc.value
+          it.flatMap { iL =>
+            val i = iL.toInt
+            val ida = cIds(i)
+            val va = cVecs(i)
+            val na = cNorms(i)
+            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+            var j = 0
+            while (j < cIds.length) {
+              if (cIds(j) > ida) {
+                val d = na * cNorms(j)
+                // d == 0 → drop (oracle's /0 = NULL); d is NaN → != 0,
+                // divide, and keep the NaN cosine (oracle keeps NaN).
+                // See the zero-norm paragraph above.
+                if (d != 0.0) {
+                  val c = seqDot(va, cVecs(j)) / d
+                  if (c >= pre || java.lang.Double.isNaN(c))
+                    out += ((ida, cIds(j), c))
+                }
               }
+              j += 1
             }
-            j += 1
+            out
           }
-          out
         }
-      }
-      .toDF("id_a", "id_b", "cos_raw")
-    Some(pairs
-      .select(col("id_a"), col("id_b"), round(col("cos_raw"), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold))
+        .toDF("id_a", "id_b", "cos_raw")
+        .select(col("id_a"), col("id_b"), round(col("cos_raw"), 6).as("cos_sim"))
+        .filter(col("cos_sim") >= threshold)
+    }
   }
 
-  /** Declarative BNLJ twin of [[embeddingNearDupsKernel]] — the fallback
-    * for corpora past the broadcast guard and the parity oracle for the
+  /** Declarative BNLJ twin of [[pairScoreKernel]] — the fallback for
+    * corpora past the broadcast guard and the parity oracle for the
     * kernel. Norms computed once per row (not per pair) — identical
     * float-op sequence to cosine(), so still oracle-exact. fanOut(0): the
     * BNLJ stream side inherits the scan partitioning, so a single-split
@@ -762,63 +697,11 @@ object Dedup {
   /** The scale path: near-dup pairs only within the same IVF cluster —
     * pair cost drops from O(n²) to Σ cluster². Pairs straddling a
     * cluster boundary are missed (recall/cost trade; raise nlist quality or
-    * probe neighboring clusters to recover). Under the broadcast guard the
-    * same [[pairScoreKernel]] as the exact path runs with cluster_id as the
-    * grouping key (the cluster-equality join pays the identical ~1 KB/pair
-    * row-materialization tax the BNLJ did); past it, the shuffled join twin
-    * runs, where AQE can split skewed clusters. */
+    * probe neighboring clusters to recover). The join shuffles on
+    * cluster_id so AQE can split skewed clusters. */
   def embeddingNearDupsIvf(df: DataFrame, centroids: Array[(Long, Array[Double])],
                            threshold: Double, idCol: String = "vec_id",
                            vecCol: String = "embedding"): DataFrame = {
-    // Same double gate as [[embeddingNearDups]]: cheap probe for dispatch,
-    // limit-bounded collect inside the kernel as the TOCTOU backstop.
-    val kernel =
-      if (fitsKernel(df, idCol))
-        embeddingNearDupsIvfKernel(df, centroids, threshold, idCol, vecCol)
-      else None
-    kernel.getOrElse(
-      embeddingNearDupsIvfJoin(df, centroids, threshold, idCol, vecCol))
-  }
-
-  /** Kernel IVF path: cluster assignment stays in Spark (`ivfAssign`'s
-    * codegen argmin — the same expression the twin evaluates, so kernel
-    * and twin agree on the cluster key by construction), pair scoring goes
-    * through [[pairScoreKernel]] keyed on cluster_id. Per-pair cosine op
-    * sequence is identical to the twin's `Similarity.cosine` — norms are
-    * `sqrt(seq-dot)` of the same vector, just hoisted per row.
-    *
-    * The assignment evaluates exactly ONCE — in the kernel's bounded
-    * collect; the kernel streams over the collected rows themselves — so
-    * no eager localCheckpoint is needed (the pre-round-12 shape
-    * checkpointed the assignment to keep the collect and the stream-side
-    * re-evaluation consistent, and stranded that checkpoint in executor
-    * storage whenever the TOCTOU guard bailed to the twin). No fanOut
-    * either: the O(pairs) loop runs on the kernel's index range at range
-    * parallelism, so the only work at scan parallelism is the argmin
-    * during the collect — worst case (a single-split corpus AT the 500k
-    * guard ceiling) ~0.5s of single-core argmin, against the ~100ms an
-    * always-on repartition exchange was measured to cost every run at
-    * ordinary sizes. */
-  private def embeddingNearDupsIvfKernel(df: DataFrame,
-                                         centroids: Array[(Long, Array[Double])],
-                                         threshold: Double, idCol: String,
-                                         vecCol: String): Option[DataFrame] = {
-    import graft.similarity.Similarity
-    val k = Similarity.ivfAssign(df, centroids, idCol, vecCol)
-      .select(col(idCol).cast("long"), col("cluster_id"),
-        kernelVec(col(vecCol)))
-    pairScoreKernel(k, threshold, kernelMaxCorpusRows(df))
-  }
-
-  /** Declarative twin of [[embeddingNearDupsIvfKernel]] — the fallback past
-    * the broadcast guard and the parity oracle for the kernel (spec-gated
-    * exceptAll-both-ways in DedupSimilaritySpec). The join shuffles on
-    * cluster_id so AQE can split skewed clusters. */
-  private[graft] def embeddingNearDupsIvfJoin(df: DataFrame,
-                                              centroids: Array[(Long, Array[Double])],
-                                              threshold: Double,
-                                              idCol: String = "vec_id",
-                                              vecCol: String = "embedding"): DataFrame = {
     import graft.similarity.Similarity
     val assigned = Similarity.ivfAssign(df, centroids, idCol, vecCol)
     val a = assigned.select(col(idCol).as("id_a"), col("cluster_id"),
@@ -838,54 +721,36 @@ object Dedup {
     * ≥ threshold cosine-similar). Output: (idCol, cluster_id, kept 1/0),
     * one row per input row.
     *
-    * Under the broadcast guard this runs a single-job accounting kernel
-    * ([[semanticDedupAccounting]]): the bounded corpus collect already
-    * holds every (id, cluster, vector), so the kernel emits each vector's
-    * MAX cosine against its lower-id cluster neighbors directly — no pair
-    * materialization, no distinct shuffle, no re-scan for the assignment
-    * side, no join. The keep decision stays in Spark
-    * (`round(cos_max, 6) >= threshold`): `round` is monotone
-    * non-decreasing on non-NaN doubles, so
+    * Under the [[graft.core.Gates.DedupKernelMaxCorpusRows]] row gate this
+    * runs a single-job accounting kernel ([[semanticDedupAccounting]]): the
+    * bounded corpus collect already holds every (id, cluster, vector), so
+    * the kernel emits each vector's MAX cosine against its lower-id
+    * cluster neighbors directly — no pair materialization, no distinct
+    * shuffle, no re-scan for the assignment side, no join. The keep
+    * decision stays in Spark (`round(cos_max, 6) >= threshold`): `round`
+    * is monotone non-decreasing on non-NaN doubles, so
     * `round(max c) >= t  ⟺  ∃ pair round(c) >= t` — the kernel never has
     * to replicate Spark's HALF_UP rounding. Measured vs the
     * pairs+distinct+join formulation it replaces (q134 at sf0.1): the
     * accounting plan drops two shuffles and a second argmin scan.
     *
-    * When the accounting kernel refuses — duplicate non-null ids, or a
-    * TOCTOU re-evaluation past the guard — the fallback is the PAIRS
-    * composition over the still-gated [[embeddingNearDupsIvf]]: pair
-    * scoring stays in the broadcast kernel whenever the corpus fits, and
-    * the distinct+join step supplies the id-level drop semantics the
-    * per-row kernel cannot (the join drops every row OF a dropped id; a
-    * per-row max would drop only the rows whose own vector matched —
-    * which is also why duplicate ids refuse the accounting kernel). For
-    * corpora past the guard or with non-long ids that composition
-    * degrades further to [[embeddingNearDupsIvfJoin]]'s shuffled join,
-    * i.e. the fully declarative [[semanticDedupIvfJoin]] twin. */
+    * Every refusal — past the gate, non-long ids, duplicate non-null ids,
+    * or a TOCTOU re-evaluation past the guard — runs the declarative
+    * [[semanticDedupIvfJoin]] twin. Duplicate ids refuse because the
+    * twin's contract is id-level (its join drops every row OF a dropped
+    * id), where a per-row max would drop only the rows whose own vector
+    * matched. */
   def semanticDedupIvf(df: DataFrame, centroids: Array[(Long, Array[Double])],
                        threshold: Double, idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
     import graft.similarity.Similarity
     val kernel =
-      if (fitsKernel(df, idCol)) {
-        val k = Similarity.ivfAssign(df, centroids, idCol, vecCol)
-          .select(col(idCol).cast("long"), col("cluster_id"),
-            kernelVec(col(vecCol)))
-        semanticDedupAccounting(k, threshold, kernelMaxCorpusRows(df), idCol)
-      } else None
-    kernel.getOrElse {
-      // Pairs from the gated path (kernel under the guard, join twin past
-      // it), then the id-level survivor join — identical rows to
-      // semanticDedupIvfJoin by the pairs-parity gate, kernel-speed
-      // scoring for the dup-id case the accounting kernel refuses.
-      val assigned = Similarity.ivfAssign(df, centroids, idCol, vecCol)
-        .select(col(idCol), col("cluster_id"))
-      val dropped = embeddingNearDupsIvf(df, centroids, threshold, idCol, vecCol)
-        .select(col("id_b").as(idCol)).distinct().withColumn("dup", lit(true))
-      assigned.join(dropped, Seq(idCol), "left")
-        .select(col(idCol), col("cluster_id"),
-          when(col("dup").isNull, lit(1)).otherwise(lit(0)).as("kept"))
-    }
+      if (fitsKernel(df, idCol))
+        semanticDedupAccounting(Similarity.ivfAssign(df, centroids, idCol, vecCol)
+          .select(col(idCol).cast("long"), col("cluster_id"), kernelVec(col(vecCol))),
+          threshold, idCol)
+      else None
+    kernel.getOrElse(semanticDedupIvfJoin(df, centroids, threshold, idCol, vecCol))
   }
 
   /** Declarative twin of the accounting kernel — the fallback past the
@@ -900,17 +765,18 @@ object Dedup {
     import graft.similarity.Similarity
     val assigned = Similarity.ivfAssign(df, centroids, idCol, vecCol)
       .select(col(idCol), col("cluster_id"))
-    val dropped = embeddingNearDupsIvfJoin(df, centroids, threshold, idCol, vecCol)
+    val dropped = embeddingNearDupsIvf(df, centroids, threshold, idCol, vecCol)
       .select(col("id_b").as(idCol)).distinct().withColumn("dup", lit(true))
     assigned.join(dropped, Seq(idCol), "left")
       .select(col(idCol), col("cluster_id"),
         when(col("dup").isNull, lit(1)).otherwise(lit(0)).as("kept"))
   }
 
-  /** Accounting kernel over a KEYED corpus (same input contract as
-    * [[pairScoreKernel]]: exactly (id: long, key: long, vec:
-    * array<double>)), emitting one (id, key, kept) row PER INPUT ROW from
-    * a single `spark.range` job over the bounded collect.
+  /** Accounting kernel over a KEYED corpus: exactly (id: long, key: long,
+    * vec: array<double>), collected through the same row gate as
+    * [[pairScoreKernel]] (whose zero-norm, bit-exactness and broadcast
+    * lifecycle notes apply verbatim), emitting one (id, key, kept) row PER
+    * INPUT ROW from a single `spark.range` job.
     *
     * Parity with [[semanticDedupIvfJoin]], case by case:
     *  - clean rows pair within their key group under `id_a < id_b`; the
@@ -921,22 +787,20 @@ object Dedup {
     *  - a row with a null id or null vector can neither drop nor be
     *    dropped (null ids fail the twin's join and `<`; null vectors
     *    yield null cosines its filter removes) → passthrough, kept = 1;
-    *  - duplicate non-null ids → None, caller runs the twin (id-level
-    *    vs row-level drop semantics — see [[semanticDedupIvf]]).
-    *
-    * The collect is `limit(maxRows + 1)`-bounded exactly like
-    * [[pairScoreKernel]]'s (TOCTOU backstop: a corpus that re-evaluates
-    * larger than the dispatch probe saw degrades to the twin, never an
-    * unbounded driver collect), and the broadcast lifecycle note there
-    * applies verbatim. */
+    *  - duplicate non-null ids, or a collect past the gate → None, the
+    *    caller runs the twin (id-level vs row-level drop semantics — see
+    *    [[semanticDedupIvf]]). */
   private[graft] def semanticDedupAccounting(corpusKeyed: DataFrame,
-                                             threshold: Double, maxRows: Int,
+                                             threshold: Double,
                                              idName: String): Option[DataFrame] = {
     val spark = corpusKeyed.sparkSession
     import spark.implicits._
-    val collected = corpusKeyed.limit(maxRows + 1)
-      .as[(Option[Long], Option[Long], Option[Array[Double]])].collect()
-    if (collected.length > maxRows) return None
+    val collected = graft.core.Gates.collectWithin(
+        corpusKeyed.as[(Option[Long], Option[Long], Option[Array[Double]])],
+        graft.core.Gates.DedupKernelMaxCorpusRows) match {
+      case Some(rows) => rows
+      case None => return None
+    }
     val definedIds = collected.iterator.flatMap(_._1)
     val seen = new java.util.HashSet[Long]()
     while (definedIds.hasNext) // any repeated id → twin semantics differ

@@ -49,40 +49,23 @@ object Ranked {
   }
 
   /** Small-input gate (r12, guide §2.4 "remove shuffles outright" applied
-    * in reverse to insurance machinery): at or below this many ESTIMATED
-    * input bytes the plain partitioned window is strictly cheaper than the
-    * decomposition — one exchange + one sort versus a range-sampling pass
-    * over the input lineage, a range exchange, a hash exchange, and the
-    * carry join (OPTIMIZATION_r12.md §3, sf0.1 events: plain 0.39s vs
-    * ranged-32 1.61s, identical output by definition). 64 MiB is far below what one
-    * task sorts comfortably, so the |groups|-task window the decomposition
-    * exists to remove is not a cliff below the gate; above it — any real
-    * fact table — the ranged path engages unchanged. Estimated from the
-    * analyzed plan's stats (same source as [[graft.core.Parallelize]];
-    * join/explode estimates only ever err UPWARD, toward the scale path).
-    * Session-overridable via [[graft.core.Gates.RankedSmallInputMaxBytes]];
-    * the all-twins suite gate forces 0 so the ranged path runs primary
-    * end-to-end, and RankedSpec/PlanRegressionSpec pin both shapes. */
-  val SmallInputMaxBytesDefault: Long = 64L << 20
-
-  /** Decompression safety factor on the size estimate (r13). For a parquet
-    * scan the analyzed-plan estimate is the COMPRESSED file size, and
-    * columnar text/fact data commonly decompresses 4-10×: a table just
-    * under the 64 MiB gate could be half a GiB raw and still take the
-    * plain |groups|-task window — the exact cliff the decomposition
-    * removes. Multiplying the estimate errs toward the ranged (scale)
-    * path, the same discipline jaccardPairs applies to its compressed
-    * estimate; estimates that are already raw-size (LogicalRDD, join
-    * outputs) only get MORE conservative. Net gate: ~16 MiB compressed ≈
-    * up to ~160 MiB raw on the plain path, which one spilling window sort
-    * handles without an executor-memory hazard. (Factor shared with the
-    * Corpus tf-shape gate via [[graft.core.Gates.DecompressionSafetyFactor]].) */
-  private[operators] def useRanged(df: DataFrame): Boolean = {
-    val limit = graft.core.Gates.effectiveLimit(df.sparkSession,
-      graft.core.Gates.RankedSmallInputMaxBytes, SmallInputMaxBytesDefault)
-    df.queryExecution.analyzed.stats.sizeInBytes *
-      graft.core.Gates.DecompressionSafetyFactor > BigInt(limit)
-  }
+    * in reverse to insurance machinery): within the
+    * [[graft.core.Gates.RankedSmallInputMaxBytes]] byte gate the plain
+    * partitioned window is strictly cheaper than the decomposition — one
+    * exchange + one sort versus a range-sampling pass over the input
+    * lineage, a range exchange, a hash exchange, and the carry join;
+    * above it — any real fact table — the ranged path engages unchanged.
+    * Estimated from the analyzed plan's stats (same source as
+    * [[graft.core.Parallelize]]; join/explode estimates only ever err
+    * UPWARD, toward the scale path) with the gate's ×4 decompression
+    * factor: a table just under 64 MiB compressed could be half a GiB raw,
+    * so the net gate is ~16 MiB compressed ≈ up to ~160 MiB raw on the
+    * plain path, which one spilling window sort handles without an
+    * executor-memory hazard. The all-twins suite gate forces 0 so the
+    * ranged path runs primary end-to-end, and RankedSpec/PlanRegressionSpec
+    * pin both shapes. */
+  private[operators] def useRanged(df: DataFrame): Boolean =
+    !graft.core.Gates.scanWithin(df, graft.core.Gates.RankedSmallInputMaxBytes)
 
   /** Resolve the range count: 0 (the default) means "the session's
     * shuffle-partition width" — the knob deployments already size to their

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * Two execution paths behind one semantic, mirroring the q44 union-find
   * design (driver fast path under a size guard, distributed fallback):
   *
-  *  - '''Driver BFS''' when the edge list fits under `driverEdgeLimit`:
+  *  - '''Driver BFS''' when the edge list fits the driver edge gate:
   *    collect the (already distributed-derived and materialized) edges and
   *    walk them in microseconds. This is the default because the graphs
   *    this operator targets are ''structurally'' tiny at any data scale —
@@ -31,45 +31,21 @@ import org.apache.spark.sql.functions._
   */
 object Reach {
 
-  /** Default driver guard: far above any dimension-keyed graph (a top-k
-    * per-source graph over a dimension key is ≤ k·|dim| edges) and far
-    * below driver-memory risk — same posture as Dedup's driverEdgeLimit. */
-  val DefaultDriverEdgeLimit = 2000000
-
   /** Shortest hop count from `source` to every node reachable in ≤
     * `maxHops` over `edgesView` (a registered temp view with integer-typed
     * `src`, `dst` columns, already materialized). Output: (node BIGINT,
-    * hops INT), one row per reached node including the source at 0. */
+    * hops INT), one row per reached node including the source at 0. The
+    * driver BFS runs while the edge list passes the
+    * [[graft.core.Gates.DriverEdgeLimit]] row gate. */
   def shortestHops(s: SparkSession, edgesView: String, source: Long,
-                   maxHops: Int,
-                   driverEdgeLimit: Int = DefaultDriverEdgeLimit): DataFrame = {
+                   maxHops: Int): DataFrame = {
     val edges = s.table(edgesView)
-    // Session override (spark.graft.reach.driverEdgeLimit) beats the call
-    // parameter — same posture as Dedup's guard; how the all-twins gate
-    // forces the recursive distributed path suite-wide.
-    // Clamped below Int.MaxValue: the probes use limit + 1, and a session
-    // forcing the driver path with limit=Int.MaxValue would otherwise wrap
-    // negative and make Dataset.limit throw.
-    val limit = math.min(graft.core.Gates.effectiveLimit(s,
-      graft.core.Gates.ReachDriverEdgeLimit, driverEdgeLimit.toLong),
-      (Int.MaxValue - 1).toLong).toInt
-    // Probe with a COUNT over limit(n+1): the count aggregates on the
-    // executors, so deciding "too big" ships one long to the driver — not
-    // limit+1 rows — and one row past the limit proves "too big"
-    // without counting the full list. Only a winning guard then collects
-    // (a second tiny job; the view is already materialized, so both jobs
-    // read cached/local data).
-    val probeCount = edges.limit(limit + 1).count()
-    if (probeCount <= limit) {
-      // limit(n+1) on the winning-guard collect too: the count above bounds
-      // what the FIRST evaluation held; a view whose re-evaluation is not
-      // deterministic (lazy re-registration, non-deterministic derivation)
-      // could return more rows the second time, and the limit keeps that
-      // from shipping an unbounded result to the driver. More than n rows
-      // here would silently truncate the BFS, so it falls back instead.
-      val adj0 = edges.limit(limit + 1).collect()
-      if (adj0.length > limit)
-        return shortestHopsRecursive(s, edgesView, source, maxHops)
+    val gate = graft.core.Gates.DriverEdgeLimit
+    val collected =
+      if (graft.core.Gates.rowsWithin(edges, gate))
+        graft.core.Gates.collectWithin(edges, gate)
+      else None
+    collected.fold(shortestHopsRecursive(s, edgesView, source, maxHops)) { adj0 =>
       // Drop NULL-keyed edges BEFORE dereferencing: the recursive twin's
       // join never matches NULL, so filtering here keeps the two paths
       // semantically identical — without it the driver path NPEd on the
@@ -92,7 +68,7 @@ object Reach {
       dist.toSeq.toDF("node", "hops")
         .select(col("node").cast("bigint").as("node"),
           col("hops").cast("int").as("hops"))
-    } else shortestHopsRecursive(s, edgesView, source, maxHops)
+    }
   }
 
   /** Distributed fallback: bounded-frontier declarative recursion —

@@ -76,10 +76,10 @@ object StreamQueries {
     * session (the all-twins mode sets its conf there; a newSession does
     * not inherit runtime conf), 0 = keep the durable default provider —
     * the long-lived-stream / 100 TB posture, which is also what any
-    * deployment resuming checkpoints across processes must run. */
+    * deployment resuming checkpoints across processes must run. The gate
+    * is a switch, so the size it admits is 0. */
   private def useMemoryStateStore(outer: SparkSession, s: SparkSession): Unit =
-    if (graft.core.Gates.effectiveLimit(outer,
-        graft.core.Gates.StreamMemoryStateStore, 1L) > 0)
+    if (graft.core.Gates.within(outer, graft.core.Gates.StreamMemoryStateStore, 0))
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         org.apache.spark.sql.graft.MemoryStateStoreProvider.ProviderName)
 

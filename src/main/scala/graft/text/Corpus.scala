@@ -81,10 +81,8 @@ object Corpus {
     // q91 2.90 vs 3.48); at 16.6 MiB decisively (q60 2.78 vs 6.05, q76
     // 1.78 vs 3.45). 0 forces id-keyed always (the 100 TB posture, what
     // the all-twins suite runs primary).
-    val limit = graft.core.Gates.effectiveLimit(docs.sparkSession,
-      graft.core.Gates.CorpusTfSmallInputMaxBytes, SmallCorpusMaxBytesDefault)
-    val idKeyed = docs.queryExecution.analyzed.stats.sizeInBytes *
-      graft.core.Gates.DecompressionSafetyFactor > BigInt(limit)
+    val idKeyed =
+      !graft.core.Gates.scanWithin(docs, graft.core.Gates.CorpusTfSmallInputMaxBytes)
     val prepped =
       if (idKeyed) docs.repartition(col(idCol))
       else graft.core.Parallelize.fanOut(docs)
@@ -94,14 +92,6 @@ object Corpus {
       .groupBy(col("id"), col("term"))
       .agg(count(lit(1)).as("tf"))
   }
-
-  /** Default small-corpus gate for [[termFrequencies]]' exchange shape:
-    * 8 MiB against the ×4-factored estimate ⇒ corpora up to ~2 MiB
-    * compressed (≈ up to ~20 MiB raw text) keep the local fanOut shape.
-    * Set from the measured crossover above (fanOut wins at 0.57 MiB,
-    * id-keyed from 5.6 MiB up), erring toward the scale shape inside the
-    * unmeasured band. */
-  val SmallCorpusMaxBytesDefault: Long = 8L << 20
 
   /** (id, term, tf, df, tfidf): tfidf = tf * ln((N + 1) / (df + 1)). The
     * +1 smoothing bounds the weight away from negative values; a term

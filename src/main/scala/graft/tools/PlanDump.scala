@@ -18,31 +18,32 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val suffix = args(1)
-    val names = args.drop(2)
+    // An unknown query name throws here, before the session starts.
+    val selected = SparkEntry.selected(Some(args.drop(2).mkString(",")))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.core.Sessions.local("plan-dump",
-      extraConf = Map("spark.sql.adaptive.enabled" -> "false"))
     // Optional session confs (r13), e.g. gate keys, so BOTH sides of a
     // size-gated shape can be dumped from one tree:
     // SPARK_GRAFT_CONF="spark.graft.corpus.tfSmallInputMaxBytes=0"
     // (comma-separated k=v pairs; values containing commas aren't
-    // supported — none of the gate keys need them)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k.trim, v.trim)
-          case _ => println(s"IGNORED malformed SPARK_GRAFT_CONF entry: $kv")
+    // supported — none of the gate keys need them). A malformed entry
+    // fails the run: dumping plans without the conf asked for would
+    // label the default shape as the gated one.
+    val confs = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).map { kv =>
+        kv.split("=", 2).map(_.trim) match {
+          case Array(k, v) if k.nonEmpty => k -> v
+          case _ => throw new IllegalArgumentException(
+            s"malformed SPARK_GRAFT_CONF entry (want key=value): $kv")
         }
-      })
-    names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(fn) =>
-          val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
-          val f = outDir.resolve(s"${name}_$suffix.txt")
-          java.nio.file.Files.write(f, plan.getBytes("UTF-8"))
-          println(s"wrote $f (${plan.length} chars)")
-        case None => println(s"UNKNOWN query $name")
       }
+    val spark = graft.core.Sessions.local("plan-dump",
+      extraConf = Map("spark.sql.adaptive.enabled" -> "false"))
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    selected.foreach { case (name, fn) =>
+      val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+      val f = outDir.resolve(s"${name}_$suffix.txt")
+      java.nio.file.Files.write(f, plan.getBytes("UTF-8"))
+      println(s"wrote $f (${plan.length} chars)")
     }
     spark.stop()
   }

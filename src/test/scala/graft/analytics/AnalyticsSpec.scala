@@ -179,10 +179,11 @@ class AnalyticsSpec extends SparkSpec {
     val bfs = graft.operators.Reach
       .shortestHops(spark, "reach_null_edges", source = 0L, maxHops = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val rec = graft.operators.Reach
-      .shortestHops(spark, "reach_null_edges", source = 0L, maxHops = 3,
-        driverEdgeLimit = 0)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    val rec = withConf(graft.core.Gates.DriverEdgeLimit -> "0") {
+      graft.operators.Reach
+        .shortestHops(spark, "reach_null_edges", source = 0L, maxHops = 3)
+        .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    }
     assert(bfs == Seq((0L, 0), (1L, 1), (2L, 2)))
     assert(rec == bfs)
   }
@@ -208,10 +209,12 @@ class AnalyticsSpec extends SparkSpec {
     val bfs = graft.operators.Reach
       .shortestHops(spark, "reach_edges", source = 0L, maxHops = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val rec = graft.operators.Reach
-      .shortestHops(spark, "reach_edges", source = 0L, maxHops = 5,
-        driverEdgeLimit = 0) // force the distributed WITH RECURSIVE path
-      .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    // force the distributed WITH RECURSIVE path
+    val rec = withConf(graft.core.Gates.DriverEdgeLimit -> "0") {
+      graft.operators.Reach
+        .shortestHops(spark, "reach_edges", source = 0L, maxHops = 5)
+        .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    }
     assert(rec == bfs)
     // Min-dist semantics: 4 via the 1→4 shortcut is 2 hops, not 3; the
     // 5-hop bound admits 6 (5 hops) but not 7; the island stays out.

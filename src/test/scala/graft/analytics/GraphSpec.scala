@@ -77,31 +77,30 @@ class GraphSpec extends SparkSpec {
       assert(fast.queryExecution.executedPlan.toString.contains("LocalTableScan"),
         "tiny graph must take the driver kernel by default")
       val a = fast.as[(Int, Long)].collect().toMap
-      spark.conf.set(graft.core.Gates.GraphDriverEdgeLimit, "0")
-      try {
+      withConf(graft.core.Gates.DriverEdgeLimit -> "0") {
         val slow = Graph.pagerank(edges, 4)
         assert(!slow.queryExecution.executedPlan.toString.contains("LocalTableScan"),
           "guard=0 must force the distributed loop")
         assert(slow.as[(Int, Long)].collect().toMap == a, s"diverged on $g")
-      } finally spark.conf.unset(graft.core.Gates.GraphDriverEdgeLimit)
+      }
     }
   }
 
   test("pagerank bounces an over-limit graph to the distributed loop (count gate)") {
-    // r13: the kernel gates on a cheap count() of the materialized edge
-    // list BEFORE collecting (a 2M-row limit+1 collect just to discover
-    // the graph is oversize was a multi-hundred-MB driver allocation).
+    // r13: the kernel gates on the row gate's cheap count probe of the
+    // materialized edge list BEFORE collecting (a 2M-row limit+1 collect
+    // just to discover the graph is oversize was a multi-hundred-MB
+    // driver allocation).
     // An edge count over the guard must take the distributed path and
     // still compute correct ranks.
     val edges = Seq((1, 2, 10L), (2, 3, 10L), (3, 1, 10L)).toDF("src", "dst", "w")
     val expected = Graph.pagerank(edges, 3).as[(Int, Long)].collect().toMap
-    spark.conf.set(graft.core.Gates.GraphDriverEdgeLimit, "2")
-    try {
+    withConf(graft.core.Gates.DriverEdgeLimit -> "2") {
       val out = Graph.pagerank(edges, 3)
       assert(!out.queryExecution.executedPlan.toString.contains("LocalTableScan"),
         "3 edges over a guard of 2 must run distributed")
       assert(out.as[(Int, Long)].collect().toMap == expected)
-    } finally spark.conf.unset(graft.core.Gates.GraphDriverEdgeLimit)
+    }
   }
 
   test("pagerank driver kernel refuses NULL keys/weights to the distributed loop") {

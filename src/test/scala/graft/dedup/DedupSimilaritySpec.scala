@@ -118,23 +118,23 @@ class DedupSpec extends SparkSpec {
     val fast = Dedup.dupClusters(pairs).as[(Long, Long)].collect().toSet
     assert(fast == Set((1L, 1L), (2L, 1L)))
     // distributed path: same semantic
-    val twin = Dedup.dupClusters(pairs, driverEdgeLimit = 0L)
-      .select(col("id").cast("long"), col("cluster_id").cast("long"))
-      .as[(Long, Long)].collect().toSet
+    val twin = withConf(graft.core.Gates.DriverEdgeLimit -> "0") {
+      Dedup.dupClusters(pairs)
+        .select(col("id").cast("long"), col("cluster_id").cast("long"))
+        .as[(Long, Long)].collect().toSet
+    }
     assert(twin == fast)
   }
 
   test("a RAISED kernel guard (Int.MaxValue) must not wrap the probe limit") {
     import spark.implicits._
-    spark.conf.set(graft.core.Gates.DedupKernelMaxCorpusRows,
-      Int.MaxValue.toString)
-    try {
+    withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> Int.MaxValue.toString) {
       val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.0)),
         (3L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
       val got = Dedup.embeddingNearDups(vecs, "vec_id", "embedding", 0.9)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       assert(got == Set((1L, 2L)))
-    } finally spark.conf.unset(graft.core.Gates.DedupKernelMaxCorpusRows)
+    }
   }
 
   test("dupClusters resolves pairs into min-id connected components") {
@@ -147,8 +147,10 @@ class DedupSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L,
       4L -> 4L, 5L -> 4L, 6L -> 4L))
     // distributed label-propagation path (driver fast path disabled) agrees
-    val distributed = rows(Dedup.dupClusters(pairs, driverEdgeLimit = 0L))
-      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
+    val distributed = withConf(graft.core.Gates.DriverEdgeLimit -> "0") {
+      rows(Dedup.dupClusters(pairs))
+        .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cluster_id")).toMap
+    }
     assert(distributed == got)
   }
 
@@ -237,20 +239,18 @@ class DedupSpec extends SparkSpec {
       (3L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
     val viaKernel = Dedup.embeddingNearDups(rows, "vec_id", "embedding", 0.9)
     assert(viaKernel.queryExecution.executedPlan.toString.contains("MapPartitions"))
-    spark.conf.set(graft.core.Gates.DedupKernelMaxCorpusRows, "1")
-    try {
+    withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> "1") {
       val exact = Dedup.embeddingNearDups(rows, "vec_id", "embedding", 0.9)
       assert(!exact.queryExecution.executedPlan.toString.contains("MapPartitions"),
         "guard must route past-limit corpora to the BNLJ twin")
       assert(exact.collect().toSet == viaKernel.collect().toSet)
+      // the IVF pairs path is the cluster-keyed join at any gate setting
       val centroids = Array((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)))
       val ivf = Dedup.embeddingNearDupsIvf(rows, centroids, 0.9, "vec_id", "embedding")
       assert(!ivf.queryExecution.executedPlan.toString.contains("MapPartitions"),
-        "guard must route past-limit corpora to the cluster-join twin")
-      assert(ivf.collect().toSet ==
-        Dedup.embeddingNearDupsIvfJoin(rows, centroids, 0.9, "vec_id", "embedding")
-          .collect().toSet)
-    } finally spark.conf.unset(graft.core.Gates.DedupKernelMaxCorpusRows)
+        "the IVF pairs path must be the cluster-join, never a kernel")
+      assert(ivf.collect().toSet == viaKernel.collect().toSet)
+    }
   }
 
   test("embeddingNearDups: null vector ELEMENTS score like the twin (0.0 slots)") {
@@ -306,48 +306,69 @@ class DedupSpec extends SparkSpec {
     // are dropped.
     assert(kernel.count() == 5L)
     assert(kernel.filter(isnan(col("cos_sim"))).count() == 4L)
-    // IVF kernel/twin agree on the same corpus too
+    // the IVF path applies the same rule: its cluster-keyed join keeps
+    // exactly the kernel's same-cluster pairs on this corpus too
     val centroids = Array((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)))
-    val ivfK = Dedup.embeddingNearDupsIvf(rows, centroids, 0.9, "vec_id", "embedding")
-    val ivfJ = Dedup.embeddingNearDupsIvfJoin(rows, centroids, 0.9, "vec_id", "embedding")
-    assert(ivfK.exceptAll(ivfJ).count() == 0L &&
-      ivfJ.exceptAll(ivfK).count() == 0L)
+    val ivf = Dedup.embeddingNearDupsIvf(rows, centroids, 0.9, "vec_id", "embedding")
+    val same = sameClusterPairs(kernel, rows, centroids)
+    assert(ivf.exceptAll(same).count() == 0L && same.exceptAll(ivf).count() == 0L)
   }
 
   test("pairScoreKernel: driver collect is limit-bounded, None past the guard") {
     import spark.implicits._
     // TOCTOU backstop: even when the dispatch-time probe approved the
-    // kernel, the collect itself runs through limit(maxRows + 1) — a
-    // corpus whose re-evaluation exceeds the guard yields None (caller
-    // falls back to the twin) instead of an unbounded driver collect.
+    // kernel, the collect itself is the row gate's limit(n + 1)-bounded
+    // collect — a corpus whose re-evaluation exceeds the guard yields
+    // None (caller falls back to the twin) instead of an unbounded driver
+    // collect.
     val k = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.001)),
       (3L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
-      .select(col("vec_id"), lit(0L).as("key"),
+      .select(col("vec_id"),
         transform(col("embedding"), x => coalesce(x, lit(0.0))).as("v"))
-    assert(Dedup.pairScoreKernel(k, 0.9, maxRows = 2).isEmpty,
-      "3-row corpus must not pass a 2-row guard at collect time")
-    val ok = Dedup.pairScoreKernel(k, 0.9, maxRows = 3)
-    assert(ok.isDefined && ok.get.count() == 1L) // the (1,2) pair
+    withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> "2") {
+      assert(Dedup.pairScoreKernel(k, 0.9).isEmpty,
+        "3-row corpus must not pass a 2-row guard at collect time")
+    }
+    withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> "3") {
+      val ok = Dedup.pairScoreKernel(k, 0.9)
+      assert(ok.isDefined && ok.get.count() == 1L) // the (1,2) pair
+    }
   }
 
-  test("embeddingNearDupsIvf: broadcast kernel is bit-identical to the join twin") {
+  /** The exact path's pairs whose two ids share an IVF cluster — what the
+    * cluster-keyed IVF join must emit, pair for pair. */
+  private def sameClusterPairs(exact: org.apache.spark.sql.DataFrame,
+                               df: org.apache.spark.sql.DataFrame,
+                               centroids: Array[(Long, Array[Double])]) = {
+    val cluster = Similarity.ivfAssign(df, centroids)
+      .select(col("vec_id"), col("cluster_id"))
+    exact.join(cluster.toDF("id_a", "ca"), "id_a")
+      .join(cluster.toDF("id_b", "cb"), "id_b")
+      .filter(col("ca") === col("cb"))
+      .select(col("id_a"), col("id_b"), col("cos_sim"))
+  }
+
+  test("embeddingNearDupsIvf: cluster join equals the kernel's same-cluster pairs") {
     // Same recipe as q134: real corpus, first 8 vectors as seed centroids,
     // threshold low enough to emit many within-cluster pairs. EXACT
-    // equality — the kernel claims the same IEEE op sequence per pair as
-    // Similarity.cosine, with norms hoisted per row.
+    // equality — Similarity.cosine runs the same IEEE op sequence per pair
+    // as the broadcast kernel, which hoists norms per row.
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val centroids = emb.filter(col("vec_id") < 8)
       .select(col("vec_id"), graft.similarity.Similarity.toDoubleVec(col("embedding")).as("v"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    val kernel = Dedup.embeddingNearDupsIvf(emb, centroids, 0.2)
-    val join = Dedup.embeddingNearDupsIvfJoin(emb, centroids, 0.2)
-    assert(kernel.count() > 20, "test corpus should emit many within-cluster pairs")
-    assert(kernel.exceptAll(join).count() == 0L &&
-      join.exceptAll(kernel).count() == 0L)
-    assert(kernel.schema.map(f => (f.name, f.dataType)) ==
-      join.schema.map(f => (f.name, f.dataType)))
+    val ivf = Dedup.embeddingNearDupsIvf(emb, centroids, 0.2)
+    val exact = Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.2)
+    assert(exact.queryExecution.executedPlan.toString.contains("MapPartitions"),
+      "the exact reference must come from the broadcast kernel")
+    val same = sameClusterPairs(exact, emb, centroids)
+    assert(ivf.count() > 20, "test corpus should emit many within-cluster pairs")
+    assert(ivf.exceptAll(same).count() == 0L &&
+      same.exceptAll(ivf).count() == 0L)
+    assert(ivf.schema.map(f => (f.name, f.dataType)) ==
+      exact.schema.map(f => (f.name, f.dataType)))
   }
 
   test("semantic dedup survivor rule: lower id survives, cross-cluster dups ignored") {
@@ -437,9 +458,7 @@ class DedupSpec extends SparkSpec {
     // The id-level contract drops EVERY row of a dropped id (join on id),
     // so both id-2 rows read kept = 0 — per-row accounting would keep the
     // orthogonal one, which is why the accounting kernel refuses duplicate
-    // ids. The fallback keeps pair SCORING in the broadcast kernel (the
-    // pairs formulation handles duplicate ids) and takes the id-level
-    // semantics from the distinct+join step.
+    // ids and the declarative twin runs.
     val rows = Seq(
       (1L, Seq(1.0, 0.0)),
       (2L, Seq(1.0, 0.001)),
@@ -447,8 +466,6 @@ class DedupSpec extends SparkSpec {
     val centroids = Array((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)))
     val got = Dedup.semanticDedupIvf(rows, centroids, 0.9)
     val plan = got.queryExecution.executedPlan.toString
-    assert(plan.contains("MapPartitions"),
-      "dup-id fallback must still score pairs in the broadcast kernel")
     assert(plan.contains("Join"),
       "dup-id fallback must take id-level semantics from the survivor join")
     val byId = got.collect().groupBy(_.getLong(0))
@@ -468,18 +485,19 @@ class DedupSpec extends SparkSpec {
     val centroids = Array((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)))
     val viaKernel = Dedup.semanticDedupIvf(rows, centroids, 0.9)
     assert(viaKernel.queryExecution.executedPlan.toString.contains("MapPartitions"))
-    spark.conf.set(graft.core.Gates.DedupKernelMaxCorpusRows, "1")
-    try {
+    withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> "1") {
       val twin = Dedup.semanticDedupIvf(rows, centroids, 0.9)
       assert(!twin.queryExecution.executedPlan.toString.contains("MapPartitions"),
         "guard must route past-limit corpora to the join twin")
       assert(twin.collect().toSet == viaKernel.collect().toSet)
-    } finally spark.conf.unset(graft.core.Gates.DedupKernelMaxCorpusRows)
+    }
     // TOCTOU backstop: the accounting collect itself is limit-bounded
     val k = rows.select(col("vec_id"), lit(0L).as("key"),
       transform(col("embedding"), x => coalesce(x, lit(0.0))).as("v"))
-    assert(Dedup.semanticDedupAccounting(k, 0.9, maxRows = 2, "vec_id").isEmpty,
-      "3-row corpus must not pass a 2-row guard at collect time")
+    withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> "2") {
+      assert(Dedup.semanticDedupAccounting(k, 0.9, "vec_id").isEmpty,
+        "3-row corpus must not pass a 2-row guard at collect time")
+    }
   }
 
   test("simhash: identical docs collide, near-dups are hamming-close") {

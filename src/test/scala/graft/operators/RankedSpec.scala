@@ -20,11 +20,8 @@ class RankedSpec extends SparkSpec {
     * every call through the plain window and leave the ranged machinery
     * untested — force the ranged path for the tests that exist to pin it
     * (the same conf the all-twins suite gate sets). */
-  private def forceRanged[T](body: => T): T = {
-    spark.conf.set(graft.core.Gates.RankedSmallInputMaxBytes, "0")
-    try body
-    finally spark.conf.unset(graft.core.Gates.RankedSmallInputMaxBytes)
-  }
+  private def forceRanged[T](body: => T): T =
+    withConf(graft.core.Gates.RankedSmallInputMaxBytes -> "0")(body)
 
   test("rowNumberRanged equals the plain window, grouped and global, any range count") { forceRanged {
     val df = corpus

@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkEntry, TestSession}
+import graft.{SparkEntry, SparkSpec, TestSession}
 
 /** Plan-shape regression guards: the properties that make these queries
   * scale are asserted, not just observed — a future edit that silently
@@ -15,15 +14,13 @@ import graft.{SparkEntry, TestSession}
   * and join finalization happen per stage at runtime); production sessions
   * keep it on.
   */
-class PlanRegressionSpec extends AnyFunSuite {
+class PlanRegressionSpec extends SparkSpec {
 
-  private lazy val spark: SparkSession = {
-    TestSession.spark
+  override lazy val spark: SparkSession = {
     val s = TestSession.spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s
   }
-  private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -202,11 +199,8 @@ class PlanRegressionSpec extends AnyFunSuite {
   /** Pin the at-scale Ranked shape: the r12 small-input gate routes tiny
     * inputs through the plain window, so shape pins force the gate off —
     * exactly what any real fact table (or the all-twins suite conf) does. */
-  private def forceRanged[T](body: => T): T = {
-    spark.conf.set(graft.core.Gates.RankedSmallInputMaxBytes, "0")
-    try body
-    finally spark.conf.unset(graft.core.Gates.RankedSmallInputMaxBytes)
-  }
+  private def forceRanged[T](body: => T): T =
+    withConf(graft.core.Gates.RankedSmallInputMaxBytes -> "0")(body)
 
   test("q107: sweep-line runs the RANGED prefix sum, windows partitioned by (group, range)") {
     // The running count decomposes through Ranked.prefixSumRanged: local
@@ -232,9 +226,9 @@ class PlanRegressionSpec extends AnyFunSuite {
     // and the per-doc window. Below it (the default at test sf) the
     // repartition must NOT appear: the local fanOut shape's narrow
     // aggregated exchanges win at this size (OPTIMIZATION_r13.md §5).
-    spark.conf.set(graft.core.Gates.CorpusTfSmallInputMaxBytes, "0")
-    val idKeyed = try plan("q60_tfidf")
-    finally spark.conf.unset(graft.core.Gates.CorpusTfSmallInputMaxBytes)
+    val idKeyed = withConf(graft.core.Gates.CorpusTfSmallInputMaxBytes -> "0") {
+      plan("q60_tfidf")
+    }
     assert(idKeyed.contains("hashpartitioning(doc_id"),
       "scale shape must exchange documents by id pre-explode")
     val local = plan("q60_tfidf")
