@@ -18,10 +18,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 object Gates {
 
   /** Broadcast pair-kernel corpus-row guard (Dedup.embeddingNearDups,
-    * Dedup.semanticDedupIvf). Honest footprint at the 500k default, dim
-    * 64: ~256 MB of primitive doubles collected plus one serialized
-    * broadcast copy — ~0.5-0.8 GB transient on the driver. Size it to the
-    * driver heap on a real cluster. */
+    * Dedup.semanticDedupIvf, Dedup.jaccardPairs). Honest footprint at the
+    * 500k default, dim 64: ~256 MB of primitive doubles collected plus one
+    * serialized broadcast copy — ~0.5-0.8 GB transient on the driver.
+    * jaccardPairs takes its kernel only while the shingle sets also fit
+    * the 128 MiB set-broadcast cap, so its driver share is at most ~128 MB
+    * of collected hashes, one sorted copy of them, plus int ranks and the
+    * CSR prefix index (≤ 4 B per posting each). Size it to the driver heap
+    * on a real cluster. */
   val DedupKernelMaxCorpusRows = "spark.graft.dedup.kernelMaxCorpusRows"
 
   /** Edges collected to the driver by the graph fast paths: union-find

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ColumnOps, TextOps}
+import graft.functions.{ColumnOps, ShingleSet, TextOps}
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard — each designed for the 100 TB shape, not the
@@ -22,12 +22,12 @@ object Dedup {
   import TextOps.P31
 
   /** Cap on the ESTIMATED derived-table bytes below which [[jaccardPairs]]
-    * broadcasts the per-doc verification sets (and
-    * [[minhashCandidatePairs]] its signature table) instead of
-    * shuffle-joining them. Callers pass an estimate of the table actually
-    * shipped — postings × 8 B for shingle sets, rows × numPerms × 8 B for
-    * signatures — not raw input bytes, which under-counts short-doc /
-    * high-numPerms corpora. */
+    * takes its broadcast kernel or broadcasts the twin's per-doc
+    * verification sets (and [[minhashCandidatePairs]] its signature table)
+    * instead of shuffle-joining them. Callers pass an estimate of the
+    * table actually shipped — postings × 8 B for shingle sets, rows ×
+    * numPerms × 8 B for signatures — not raw input bytes, which
+    * under-counts short-doc / high-numPerms corpora. */
   private val SetsBroadcastMaxInputBytes = BigInt(128L << 20)
 
   /** Byte cap for re-broadcasting the connected-components label table
@@ -105,11 +105,20 @@ object Dedup {
     // of every shingle into a corpus×shingles exchange feeding numPerms
     // min-aggregates. Docs with fewer than shingleN tokens produce NULL
     // and are dropped, matching the explode shape (no shingle rows).
+    nonNullPerRow(df, idCol, "sig",
+      graft.functions.MinHash.signature(col(textCol), numPerms, shingleN))
+
+  /** (id, `name`) rows of a per-row kernel, the rows whose value is NULL
+    * dropped — with the kernel evaluated ONCE per row. The plain
+    * `.select(kernel.as(name)).filter(col(name).isNotNull)` runs it twice:
+    * the optimizer pushes the predicate below the projection, inlining the
+    * kernel into a Filter. A Generate over the one-element array of the
+    * non-NULL value is opaque to that pushdown (and, its input not being a
+    * bare attribute, gets no inferred size filter either). */
+  private def nonNullPerRow(df: DataFrame, idCol: String, name: String,
+                            kernel: Column): DataFrame =
     graft.core.Parallelize.fanOut(df)
-      .select(col(idCol).as("id"),
-        graft.functions.MinHash.signature(col(textCol), numPerms, shingleN)
-          .as("sig"))
-      .filter(col("sig").isNotNull)
+      .select(col(idCol).as("id"), explode(array_compact(array(kernel))).as(name))
 
   /** Candidate near-dup pairs via MinHash LSH: band the signatures, self-join
     * on the bucket, keep each (a<b) pair once with its signature-estimated
@@ -134,8 +143,8 @@ object Dedup {
     // so the Σ bucket² join and the distinct shuffle 16-byte rows instead
     // of ~2·numPerms·8 B. est_jaccard is a pure function of the pair, so
     // distinct-then-estimate equals estimate-then-distinct. The estimate
-    // joins broadcast the corpus-sized signature table only when the input
-    // corpus is small (same stats source as jaccardPairs' verification).
+    // joins broadcast the corpus-sized signature table only when it is
+    // small (the same cap as jaccardPairs' set table).
     val buckets = capBuckets(sigs.select(col("id"),
       explode(lshBandKeys(col("sig"), bands, rows)).as("bucket")),
       maxBucketSize, "minhashCandidatePairs")
@@ -183,86 +192,319 @@ object Dedup {
     * since survivors also satisfy n_b ≥ t·n_a, inter ≥ ⌈t·n_a⌉ — so
     * skipping the ⌈t·n_a⌉−1 most-common shingles of a doc cannot skip ALL
     * shared ones). High-df boilerplate shingles sort to the ends and never
-    * generate candidates — lossless, unlike a df cap. Candidates are then
-    * verified exactly with one `array_intersect` against the two full
-    * shingle sets. Candidate generation uses t−1e-6 so the 6-decimal
-    * rounding of the reported jaccard can't admit a pair the prefix bound
-    * excluded.
+    * generate candidates. Candidates are then verified exactly with a
+    * sorted-merge intersection count against the two full shingle sets.
+    * Candidate generation uses t−1e-6 so the 6-decimal rounding of the
+    * reported jaccard can't admit a pair the prefix bound excluded. The
+    * result is the set of pairs whose rounded jaccard reaches `threshold`,
+    * whatever global order the prefixes were cut from.
     *
-    * `maxDocFreq` (default: unbounded = exact) additionally caps shingle
-    * document frequency: capped shingles drop from BOTH candidate
-    * generation and intersection counts while denominators keep the full
-    * set sizes — pairs whose overlap is exclusively boilerplate are missed
-    * and reported jaccard can undercount; the standard recall/cost trade.
-    * The prefix bound stays valid under the cap (inter still ≥ ⌈t·n_a⌉ for
-    * survivors, and the capped list is a suffix-truncation of the same
-    * global order), so the formula is one and the same in both modes.
+    * Constant-factor hardenings, each measured on an adversarially DENSE
+    * corpus (50k distinct ~300-char docs over only 35k distinct shingles —
+    * every shingle common, so the prefix alone cut join rows just 2.9×,
+    * 287M→100M, and left 31.8M candidates):
     *
-    * Three constant-factor hardenings, each measured on an adversarially
-    * DENSE corpus (50k distinct ~300-char docs over only 35k distinct
-    * shingles — every shingle common, so the prefix alone cut join rows
-    * just 2.9×, 287M→100M, and left 31.8M candidates):
-    *
-    *  - **Shingles are hashed to 60-bit longs** ([[ColumnOps.stable64]])
-    *    right after the explode. Candidate generation and intersection
-    *    counts are hash-set arithmetic either way; on longs the
-    *    verification arrays are ~8 B/element instead of ~17-byte strings
-    *    and every join/intersect compares words, not bytes. Collisions
-    *    (~n_pair·|union|²/2⁶¹) are negligible at any realistic corpus
-    *    size, and the REPORTED jaccard is pure set-count arithmetic, so a
-    *    string-computing reference engine agrees bit-for-bit.
+    *  - **One shingle-set column** ([[ShingleSet.hashes]]): each document's
+    *    distinct shingles as sorted 60-bit md5 hashes, in one codegen'd pass
+    *    per row. Candidate generation and intersection counts are hash-set
+    *    arithmetic either way; on longs the sets are ~8 B/element instead
+    *    of ~17-byte strings and every join/merge compares words, not bytes.
+    *    Collisions (~n_pair·|union|²/2⁶¹) are negligible at any realistic
+    *    corpus size, and the REPORTED jaccard is pure set-count arithmetic,
+    *    so a string-computing reference engine agrees bit-for-bit.
     *  - **Positional filter** (PPJoin, Xiao/Wang/Lin/Yu, WWW'08): a match
     *    at per-doc sorted positions (i, j) caps the achievable overlap at
     *    min(n_a−i, n_b−j)+1, which must reach ⌈t/(1+t)·(n_a+n_b)⌉ — late-
-    *    position-only matches prune inside the join, before the distinct.
-    *  - **Verification sets broadcast when the input corpus is small**
-    *    (analyzed-plan stats, same source as [[graft.core.Parallelize]]):
-    *    the per-doc set table is corpus-sized, so shipping it to every
-    *    executor once beats shuffling candidate×set rows — at 10× bench
-    *    scale the two set joins otherwise move ~|cands|·|set| bytes twice.
-    *    Big corpora keep the shuffle joins (sets grow with the corpus;
-    *    candidates are what they are).
+    *    position-only matches prune before verification.
+    *  - **Size filter**: jaccard ≥ t forces inter ≥ t·max(n_a,n_b) while
+    *    inter ≤ min(n_a,n_b), so min ≥ t·max.
     *
-    * Plan shape: explode → df hash-agg → shingle join → one window pass on
-    * id (prefix rank) + one collect_list agg on id (verification sets) →
-    * prefix self-join → two id-keyed joins. Every exchange carries data
-    * proportional to corpus postings or surviving pairs — nothing Σ df². */
+    * Two paths, decided by one sizing aggregate (text bytes and rows):
+    *  - a corpus under the [[graft.core.Gates.DedupKernelMaxCorpusRows]]
+    *    row gate whose sets fit the broadcast cap, with bigint ids, runs
+    *    [[jaccardKernel]] — df, prefixes and the index are built once on
+    *    the driver and verification runs range-parallel under a broadcast;
+    *  - everything else (and every kernel refusal) runs the declarative
+    *    [[jaccardTwin]], whose exchanges all carry data proportional to
+    *    corpus postings or surviving pairs — nothing Σ df². */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                   shingleN: Int, threshold: Double,
-                   maxDocFreq: Int = Int.MaxValue): DataFrame = {
+                   shingleN: Int, threshold: Double): DataFrame = {
+    // The set table is postings × 8 B (one hashed long per word shingle).
+    // Shingle count ≤ word count, and a whitespace-separated word occupies
+    // ≥5 input bytes on real text, so the sets are ≤ ~2× the input TEXT
+    // bytes. That factor must apply to the TRUE text bytes, measured with
+    // one cheap octet_length aggregate — the analyzed-plan stats are the
+    // parquet scan's COMPRESSED file size, and near-dup-heavy text (this
+    // operator's target workload) compresses 5-10×, so a 60 MB file could
+    // gate a ~1 GB set table into a broadcast. The same aggregate counts
+    // the rows for the kernel's row gate. The scan reads text only (no
+    // tokenization), and it is ONE single-stage job: per-partition
+    // (bytes, rows) partials summed on the driver, where a SQL global
+    // aggregate plans an exchange — two jobs and a re-plan under AQE,
+    // ~2× the latency on a small corpus.
+    // Skip the scan when the decision is already determined: compression
+    // never inflates text, so raw ≥ compressed, and once 2×compressed
+    // exceeds the cap, 2×raw does too — the twin's shuffle path is decided
+    // without reading a byte (at warehouse scale this removes one full
+    // corpus pass from every call, the case that can least afford it). The
+    // opposite shortcut (broadcast without the scan) is NOT taken: it would
+    // rest on an upper bound for the text ratio, and a wrong guess there is
+    // an executor-memory hazard, not a lost scan. The estimate reads the
+    // PROJECTED text column, not the full input width: a wide input whose
+    // bulk is non-text columns must not trip the shortcut.
+    val statsBytes =
+      df.select(col(textCol)).queryExecution.analyzed.stats.sizeInBytes
+    val (setsBytes, rows) =
+      if (statsBytes * 2 >= SetsBroadcastMaxInputBytes) (statsBytes * 2, None)
+      else {
+        val (bytes, n) = df.select(coalesce(octet_length(col(textCol)), lit(0)))
+          .queryExecution.toRdd
+          .mapPartitions { it =>
+            var b = 0L
+            var n = 0L
+            while (it.hasNext) { b += it.next().getInt(0); n += 1 }
+            Iterator.single((b, n))
+          }
+          .fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+        (BigInt(bytes) * 2, Some(n))
+      }
+    val small = setsBytes < SetsBroadcastMaxInputBytes
+    val kernel = rows
+      .filter(n => small &&
+        df.schema(idCol).dataType == org.apache.spark.sql.types.LongType &&
+        graft.core.Gates.within(df.sparkSession,
+          graft.core.Gates.DedupKernelMaxCorpusRows, n))
+      .flatMap(_ => jaccardKernel(df.select(col(idCol),
+        ShingleSet.hashes(col(textCol), shingleN)), threshold))
+    kernel.getOrElse(jaccardTwin(df, idCol, textCol, shingleN, threshold, small))
+  }
+
+  /** Broadcast jaccard pair kernel — [[pairScoreKernel]]'s shape for
+    * shingle sets. The input must project exactly (id: long, sh:
+    * array<bigint> sorted distinct, i.e. [[ShingleSet.hashes]]); it is
+    * collected ONCE through the row gate's bounded collect. On the driver,
+    * in primitive arrays only: one sort of every posting gives each hash's
+    * df, a counting sort by df ranks every hash in the global (df, h)
+    * order, and each document becomes its ascending run of ranks in one
+    * CSR array — its prefix is the first ⌊(1−t)·n⌋+1 ranks, and an inverted
+    * CSR index maps each rank to the (doc, position) prefix entries that
+    * hold it. The broadcast ships those arrays; `spark.range` over
+    * document indices streams the probe side, so for each document the
+    * index lists of its prefix yield the candidates it owns ([[owns]]),
+    * the size and positional filters run as in the twin (both are
+    * symmetric in the pair), each candidate is verified once
+    * by a merge count over the two rank runs (ranks are a bijection of the
+    * hashes, so the count is the hash-set intersection), and (id_a, id_b,
+    * inter, n_a, n_b) rows with raw jaccard ≥ t−1e-6 leave the kernel.
+    * Spark's own `round(inter/(n_a+n_b−inter), 6) >= threshold` then
+    * produces the output, so rounding is shared with the twin by
+    * construction (6-dp HALF_UP moves a value by at most 5e-7, so the
+    * prefilter never drops a pair the rounded filter keeps).
+    *
+    * Semantics are the twin's: NULL ids are dropped, and NULL, empty or
+    * short text has no shingles and so no pairs. Duplicate non-NULL ids
+    * (empty-set rows included) or a collect past the gate (TOCTOU growth)
+    * → None, and the caller runs the twin: its joins pair rows, not ids.
+    *
+    * Broadcast lifecycle: as [[pairScoreKernel]]'s — captured by the
+    * returned plan's closure, reclaimed by ContextCleaner once the caller
+    * drops the DataFrame. */
+  private[graft] def jaccardKernel(corpus: DataFrame,
+                                   threshold: Double): Option[DataFrame] = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val collected = graft.core.Gates.collectWithin(
+        corpus.toDF("id", "sh").filter(col("id").isNotNull)
+          .as[(Long, Array[Long])],
+        graft.core.Gates.DedupKernelMaxCorpusRows) match {
+      case Some(rows) => rows
+      case None => return None
+    }
+    val sortedIds = collected.map(_._1)
+    java.util.Arrays.sort(sortedIds)
+    var k = 1
+    while (k < sortedIds.length) {
+      if (sortedIds(k) == sortedIds(k - 1)) return None
+      k += 1
+    }
+    val docs = collected.filter(r => r._2 != null && r._2.nonEmpty)
     val tau = threshold - 1e-6
-    val base = graft.core.Parallelize.fanOut(df)
-      .select(col(idCol).as("id"),
-        TextOps.wordShingles(col(textCol), shingleN).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-    // stable64 is injective on any real shingle vocabulary (60-bit md5
-    // prefix); distinct strings → distinct longs, so counts are unchanged.
-    val postings = base.select(col("id"), size(col("shingles")).as("n_sh"),
-      explode(col("shingles")).as("shingle"))
-      .select(col("id"), col("n_sh"), ColumnOps.stable64(col("shingle")).as("h"))
+    val (off, rk, idxOff, idxDoc, idxPos) = prefixIndex(docs.map(_._2), tau)
+    val bc = spark.sparkContext.broadcast(
+      (docs.map(_._1), off, rk, idxOff, idxDoc, idxPos))
+    Some(spark.range(docs.length.toLong)
+      .mapPartitions { it =>
+        val (ids, cOff, cRk, cIdxOff, cIdxDoc, cIdxPos) = bc.value
+        // mark(b) == a + 1: b is already a candidate of a
+        val mark = new Array[Int](ids.length)
+        it.flatMap { aL =>
+          val a = aL.toInt
+          val ida = ids(a)
+          val sa = cOff(a)
+          val na = cOff(a + 1) - sa
+          val pa = prefixLength(na, tau)
+          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Int, Int)]
+          var x = 0
+          while (x < pa) {
+            val r = cRk(sa + x)
+            var e = cIdxOff(r)
+            while (e < cIdxOff(r + 1)) {
+              val b = cIdxDoc(e)
+              if (b != a && owns(ida, ids(b)) && mark(b) != a + 1) {
+                val sb = cOff(b)
+                val nb = cOff(b + 1) - sb
+                if (math.min(na, nb).toDouble >= math.max(na, nb) * tau &&
+                    (math.min(na - x - 1, nb - cIdxPos(e) - 1) + 1).toDouble *
+                      (1.0 + tau) >= (na + nb).toDouble * tau) {
+                  mark(b) = a + 1
+                  val inter = mergeCount(cRk, sa, na, sb, nb)
+                  if (inter.toDouble / (na + nb - inter).toDouble >= tau)
+                    out += ((math.min(ida, ids(b)), math.max(ida, ids(b)), inter, na, nb))
+                }
+              }
+              e += 1
+            }
+            x += 1
+          }
+          out
+        }
+      }
+      .toDF("id_a", "id_b", "inter", "n_a", "n_b")
+      .select(col("id_a"), col("id_b"), round(col("inter").cast("double") /
+        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6).as("jaccard"))
+      .filter(col("jaccard") >= threshold))
+  }
+
+  /** Whether the document with id `ida` probes its pair with `idb` in
+    * [[jaccardKernel]]: a bit mixed from both ids (so both sides agree)
+    * picks the lower or the higher id, and each document owns about half
+    * of its pairs wherever it sits in the range. "The lower id probes"
+    * would give the first of four range tasks ~7/16 of an id-ordered
+    * corpus's pairs and the last ~1/16. */
+  private def owns(ida: Long, idb: Long): Boolean =
+    if ((((ida ^ idb) * 0x9E3779B97F4A7C15L) >>> 63) == 0L) ida < idb else ida > idb
+
+  /** Prefix length of an n-shingle set at threshold tau — the twin's
+    * `floor(n_sh * (1 - tau)) + 1`, in the same double arithmetic. */
+  private def prefixLength(n: Int, tau: Double): Int =
+    math.min(n, math.floor(n * (1.0 - tau)).toInt + 1)
+
+  /** [[jaccardKernel]]'s driver build over non-empty sorted distinct hash
+    * sets: (off, rk) is the CSR of each set as ascending global (df, h)
+    * ranks; (idxOff, idxDoc, idxPos) the CSR inverted index from rank to
+    * the (set, 0-based position) prefix entries holding it, in set
+    * order. */
+  private def prefixIndex(sets: Array[Array[Long]], tau: Double)
+      : (Array[Int], Array[Int], Array[Int], Array[Int], Array[Int]) = {
+    val n = sets.length
+    val off = new Array[Int](n + 1)
+    var i = 0
+    while (i < n) { off(i + 1) = off(i) + sets(i).length; i += 1 }
+    val all = new Array[Long](off(n))
+    i = 0
+    while (i < n) {
+      System.arraycopy(sets(i), 0, all, off(i), sets(i).length); i += 1
+    }
+    java.util.Arrays.sort(all)
+    // distinct hashes (ascending) and their document frequencies
+    val uniq = new Array[Long](all.length)
+    val df = new Array[Int](all.length)
+    var u = 0
+    var maxDf = 0
+    i = 0
+    while (i < all.length) {
+      var j = i
+      while (j < all.length && all(j) == all(i)) j += 1
+      uniq(u) = all(i); df(u) = j - i; maxDf = math.max(maxDf, j - i)
+      u += 1; i = j
+    }
+    // counting sort by df, stable over ascending h: rank = (df, h) order
+    val start = new Array[Int](maxDf + 2)
+    i = 0
+    while (i < u) { start(df(i) + 1) += 1; i += 1 }
+    i = 1
+    while (i <= maxDf + 1) { start(i) += start(i - 1); i += 1 }
+    val rank = new Array[Int](u)
+    i = 0
+    while (i < u) { rank(i) = start(df(i)); start(df(i)) += 1; i += 1 }
+    val rk = new Array[Int](off(n))
+    val idxOff = new Array[Int](u + 1)
+    i = 0
+    while (i < n) {
+      var j = off(i)
+      while (j < off(i + 1)) {
+        rk(j) = rank(java.util.Arrays.binarySearch(uniq, 0, u, sets(i)(j - off(i))))
+        j += 1
+      }
+      java.util.Arrays.sort(rk, off(i), off(i + 1))
+      j = 0
+      while (j < prefixLength(off(i + 1) - off(i), tau)) {
+        idxOff(rk(off(i) + j) + 1) += 1; j += 1
+      }
+      i += 1
+    }
+    i = 1
+    while (i <= u) { idxOff(i) += idxOff(i - 1); i += 1 }
+    val fill = java.util.Arrays.copyOf(idxOff, u)
+    val idxDoc = new Array[Int](idxOff(u))
+    val idxPos = new Array[Int](idxOff(u))
+    i = 0
+    while (i < n) {
+      var j = 0
+      while (j < prefixLength(off(i + 1) - off(i), tau)) {
+        val r = rk(off(i) + j)
+        idxDoc(fill(r)) = i; idxPos(fill(r)) = j; fill(r) += 1
+        j += 1
+      }
+      i += 1
+    }
+    (off, rk, idxOff, idxDoc, idxPos)
+  }
+
+  /** Intersection size of two ascending distinct runs of `xs`. */
+  private def mergeCount(xs: Array[Int], sa: Int, na: Int, sb: Int, nb: Int): Int = {
+    var i = sa
+    var j = sb
+    var c = 0
+    while (i < sa + na && j < sb + nb) {
+      if (xs(i) < xs(j)) i += 1
+      else if (xs(i) > xs(j)) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
+  }
+
+  /** Declarative twin of [[jaccardKernel]] — the scale path, the fallback
+    * for every kernel refusal, and its parity oracle. Plan shape: one
+    * shingle-set projection per consumer (no `size > 0` filter: an
+    * explode_outer infers none, so the set expression is never duplicated
+    * into a pushed-down predicate; empty and NULL sets yield one NULL
+    * posting the df join drops) → df hash-agg → posting/df join → one
+    * window pass on id (prefix rank) → prefix self-join with the size and
+    * positional filters → distinct candidates → two id-keyed joins of the
+    * set table, broadcast (one exchange, reused) when `broadcastSets`. */
+  private[graft] def jaccardTwin(df: DataFrame, idCol: String, textCol: String,
+                                 shingleN: Int, threshold: Double,
+                                 broadcastSets: Boolean): DataFrame = {
+    val tau = threshold - 1e-6
+    val sets = graft.core.Parallelize.fanOut(df)
+      .select(col(idCol).as("id"), ShingleSet.hashes(col(textCol), shingleN).as("sh"))
+      .select(col("id"), size(col("sh")).as("n_sh"), col("sh"))
+    val postings = sets.select(col("id"), col("n_sh"), explode_outer(col("sh")).as("h"))
     val dfreq = postings.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val withDf = postings.join(dfreq, "h")
-    val kept =
-      if (maxDocFreq == Int.MaxValue) withDf
-      else withDf.filter(col("df") <= maxDocFreq)
-    // Per-doc prefix of the global (df, h) order. n_sh is the FULL set
-    // size even under a cap — that is what the lemma needs. rn (the sorted
-    // position) rides along for the positional filter.
+    // Per-doc prefix of the global (df, h) order; rn (the sorted position)
+    // rides along for the positional filter.
     val byRarity = org.apache.spark.sql.expressions.Window
       .partitionBy(col("id")).orderBy(col("df").asc, col("h").asc)
-    val prefix = kept
+    val prefix = postings.join(dfreq, "h")
       .withColumn("rn", row_number().over(byRarity))
       .where(col("rn") <=
         floor(col("n_sh") * lit(1.0 - tau)).cast("int") + lit(1))
       .select(col("id"), col("n_sh"), col("rn"), col("h"))
-    // Size filter (also lossless): jaccard ≥ t forces inter ≥ t·max(n_a,n_b)
-    // while inter ≤ min(n_a,n_b), so min ≥ t·max. Evaluating it inside the
-    // join keeps size-incompatible pairs out of the candidate distinct and
-    // the verification joins entirely. The positional filter prunes pairs
-    // whose matches all sit too late in the sorted sets to reach the
-    // required overlap ⌈t/(1+t)·(n_a+n_b)⌉ — a pair survives iff ANY of
-    // its prefix matches passes, which the post-filter distinct preserves.
-    val joined = prefix.as("a")
+    // Both filters evaluate inside the join, so size-incompatible and
+    // late-position-only matches never reach the candidate distinct; a
+    // pair survives iff ANY of its prefix matches passes.
+    val candidates = prefix.as("a")
       .join(prefix.as("b"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id") &&
           least(col("a.n_sh"), col("b.n_sh")).cast("double") >=
@@ -271,93 +513,20 @@ object Dedup {
             + lit(1)).cast("double") * lit(1.0 + tau) >=
             (col("a.n_sh") + col("b.n_sh")).cast("double") * lit(tau))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    // Verification sets: the CAPPED shingle list (intersection counts only
-    // surviving shingles) alongside the full size for the denominator.
-    // Sets are SORTED once here so verification can run a fused two-pointer
-    // merge count (SortedIntersectCountExpr) instead of a per-pair hash-set
-    // + intersection-array build: O(n log n) once per doc buys zero
-    // allocation per candidate pair, where the pair volume dwarfs the doc
-    // count on every near-dup corpus.
-    // Uncapped mode: the per-doc verification set is exactly the (distinct)
-    // shingle array `base` already carries, hashed — derive it MAP-SIDE
-    // (transform + sort_array, no exchange) instead of re-aggregating the
-    // exploded postings (exchange by id + object-agg collect_list: the
-    // single most expensive marginal stage in the r12 kernel
-    // decomposition (OPTIMIZATION_r12.md §2), ~1.0s of the kernel's 2.7s
-    // at sf0.1; the map-side derivation re-runs tokenize+shingle for this
-    // arm, but that is a parallel map stage sharing fanOut's reused
-    // exchange — full kernel
-    // 2.62→2.27s same-session, identical 256 pairs). Capped mode keeps the
-    // grouped build: its sets must drop the df-capped shingles, which only
-    // the posting-level df join knows.
-    val sets0 =
-      if (maxDocFreq == Int.MaxValue)
-        base.select(col("id"), size(col("shingles")).as("n_sh"),
-          sort_array(transform(col("shingles"),
-            s => ColumnOps.stable64(s))).as("sh"))
-      else kept.groupBy(col("id"))
-        .agg(first(col("n_sh")).as("n_sh"),
-          sort_array(collect_list(col("h"))).as("sh"))
-    // The broadcast table is postings × 8 B (one hashed long per word
-    // shingle). Shingle count ≤ word count, and a whitespace-separated
-    // word occupies ≥5 input bytes on real text, so the derived sets are
-    // ≤ ~2× the input TEXT bytes. That factor must apply to the TRUE
-    // text bytes, measured with one cheap octet_length aggregate — the
-    // analyzed-plan stats it used to read are the parquet scan's
-    // COMPRESSED file size, and near-dup-heavy text (this operator's
-    // target workload) compresses 5-10×, so a 60 MB file could gate a
-    // ~1 GB set table into a broadcast. The extra action scans text only
-    // (no tokenization) — noise next to the self-join it sizes.
-    // r12: skip the sizing scan when the decision is already determined.
-    // The octet pass exists because the analyzed-plan estimate is the
-    // parquet scan's COMPRESSED size and near-dup text compresses 5-10× —
-    // but that uncertainty only matters NEAR the threshold. Compression
-    // never inflates text, so raw ≥ compressed: once 2×compressed already
-    // exceeds the gate, 2×raw does too and the shuffle path is decided
-    // without reading a byte — at warehouse scale this removes one full
-    // corpus pass from every call, which is exactly the case that can
-    // least afford it. The opposite shortcut (broadcast without the scan)
-    // is NOT taken: it would rest on an upper bound for the text ratio,
-    // and a wrong guess there is an executor-memory hazard, not a lost
-    // scan. Small corpora keep the exact octet measurement.
-    // Estimate from the PROJECTED text column, not the full input width
-    // (r13): the gate and the octet measure must bound the same quantity.
-    // A wide input whose bulk is non-text columns would otherwise trip the
-    // skip-scan shortcut and silently forgo a broadcast its text actually
-    // fits — conservative, but a lost optimization for wide schemas.
-    val statsBytes =
-      df.select(col(textCol)).queryExecution.analyzed.stats.sizeInBytes
-    val inputBytes =
-      if (statsBytes * 2 >= SetsBroadcastMaxInputBytes) statsBytes * 2
-      else BigInt(
-        df.agg(sum(octet_length(col(textCol)).cast("long"))).head
-          .getAs[java.lang.Long](0) match { case null => 0L; case v => v.longValue }
-      ) * 2
-    def verify(pairs: DataFrame, sets: DataFrame): DataFrame = pairs
-      .join(sets.select(col("id").as("id_a"), col("n_sh").as("n_a"),
+      .distinct()
+    // The sets are sorted, so verification is a fused two-pointer merge
+    // count (SortedIntersectCountExpr): zero allocation per candidate pair.
+    val setSide = if (broadcastSets) broadcast(sets) else sets
+    candidates
+      .join(setSide.select(col("id").as("id_a"), col("n_sh").as("n_a"),
         col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("n_sh").as("n_b"),
+      .join(setSide.select(col("id").as("id_b"), col("n_sh").as("n_b"),
         col("sh").as("sh_b")), "id_b")
       .withColumn("inter",
         graft.functions.Intersect.sortedCount(col("sh_a"), col("sh_b")))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
+      .select(col("id_a"), col("id_b"), round(col("inter").cast("double") /
+        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    if (inputBytes < SetsBroadcastMaxInputBytes)
-      // Small corpus: the set table broadcasts, so verification is
-      // map-side and PIPELINES with the prefix join — verify every join
-      // row (duplicates included; jaccard is a pure pair function) and
-      // distinct only the SURVIVORS. This removes the one remaining
-      // candidate-proportional exchange (a distinct over tens of millions
-      // of candidate rows) in exchange for re-running the in-stage
-      // intersect per duplicate match — measured cheaper by far.
-      verify(joined, broadcast(sets0)).distinct()
-    else
-      // Big corpus: sets shuffle-join, so dedup candidates FIRST — the
-      // distinct is cheaper than widening every duplicated match with two
-      // corpus-sized array joins.
-      verify(joined.distinct(), sets0)
   }
 
   // ---- dup-cluster resolution (connected components) ---------------------
@@ -1090,8 +1259,8 @@ object Dedup {
     * no dedup signal but dominate the join quadratically; capping bounds
     * any single bucket's contribution at maxBucketSize². The dropped-bucket
     * count is computed eagerly and logged — an explicit, visible recall
-    * trade (the pairs wholly inside a dropped bucket are missed), mirroring
-    * [[jaccardPairs]]'s `maxDocFreq`. No-op (and no extra job) at the
+    * trade (the pairs wholly inside a dropped bucket are missed). No-op
+    * (and no extra job) at the
     * default unbounded setting, which keeps exact-recall semantics. */
   private def capBuckets(buckets: DataFrame, maxBucketSize: Int, what: String,
                          bucketCol: String = "bucket"): DataFrame =
@@ -1126,8 +1295,6 @@ object Dedup {
     // a 31-aggregate hash agg, the largest exchange in the dedup family
     // at warehouse scale. Token-less docs produce NULL and are dropped,
     // matching the explode shape where they generate no rows.
-    graft.core.Parallelize.fanOut(df)
-      .select(col(idCol).as("id"),
-        graft.functions.SimHash31.simhash(col(textCol)).as("simhash"))
-      .filter(col("simhash").isNotNull)
+    nonNullPerRow(df, idCol, "simhash",
+      graft.functions.SimHash31.simhash(col(textCol)))
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * intersection ARRAY per evaluated pair; at verification volume
   * (millions of candidate pairs, each with shingle sets of hundreds of
   * longs) the per-pair allocation and hashing dominate the stage. With
-  * both sets sorted ONCE at set-build time (`sort_array` after the
-  * per-doc collect), the count is a linear two-pointer merge with zero
+  * both sets sorted ONCE at set-build time ([[ShingleSetExpr]] emits
+  * them sorted), the count is a linear two-pointer merge with zero
   * allocation. Duplicate values count once on each side (merge skips
   * runs), matching `array_intersect`'s distinct semantics — though the
   * shingle sets this library feeds it are duplicate-free by

@@ -56,8 +56,8 @@ case class Md5Prefix48Expr(child: Expression) extends UnaryExpression {
   * (15 hex chars = 7 full digest bytes + the high nibble of byte 7, read
   * big-endian, range [0, 2^60)) — the same byte assembly
   * [[SimHash31.h31]] uses internally, exposed as a standalone expression
-  * so every per-posting hash in the dedup/text family (shingle hashing
-  * under the Jaccard prefix filter, fingerprints, token ids) runs
+  * so every per-posting hash in the dedup/text family (fingerprints,
+  * token ids) runs
   * allocation-free inside WholeStageCodegen instead of allocating a hex
   * string, a substring, and a base-conversion parse per exploded row.
   */

@@ -261,7 +261,8 @@ class GatesSpec extends SparkSpec {
   ).map { case (n, r) => n -> r.toDF("grp", "v", "id") }
 
   /** (doc_id, text) corpora: empty, all-NULL ids, duplicate ids, one hot
-    * term, empty / NULL / unicode text. */
+    * term, one shingle every document shares, empty / NULL / unicode
+    * text. */
   private lazy val docFrames: Seq[(String, DataFrame)] = {
     def l(i: Long): java.lang.Long = java.lang.Long.valueOf(i)
     Seq(
@@ -269,6 +270,7 @@ class GatesSpec extends SparkSpec {
       "null ids" -> Seq((null: java.lang.Long, "a b"), (null, "c a")),
       "duplicate ids" -> Seq((l(1), "a b"), (l(1), "a c"), (l(2), "b")),
       "hot term" -> Seq((l(1), Seq.fill(300)("x").mkString(" ")), (l(2), "x y")),
+      "hot shingle" -> (1L to 20L).map(i => (l(i), s"shared wörds 東京${i % 4}")),
       "unicode text" -> (unicode.zipWithIndex.map { case (t, i) => (l(i.toLong), t) } ++
         Seq((l(10), null: String), (l(11), "   ")))
     ).map { case (n, r) => n -> r.toDF("doc_id", "text") }
@@ -323,6 +325,8 @@ class GatesSpec extends SparkSpec {
       (Gates.RankedSmallInputMaxBytes, "rowNumberRanged", over(rankFrames)(
         graft.operators.Ranked.rowNumberRanged(_, Seq("grp"),
           Seq(col("v"), col("id")), "rn"))),
+      (Gates.DedupKernelMaxCorpusRows, "jaccardPairs", over(docFrames)(
+        Dedup.jaccardPairs(_, "doc_id", "text", 2, 0.3))),
       (Gates.CorpusTfSmallInputMaxBytes, "termFrequencies", over(docFrames)(
         graft.text.Corpus.termFrequencies(_, "doc_id", "text"))),
       (Gates.StreamMemoryStateStore, "q117_stream_dedup",

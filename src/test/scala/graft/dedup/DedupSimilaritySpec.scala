@@ -42,21 +42,97 @@ class DedupSpec extends SparkSpec {
     assert(!got.exists { case (a, b, _) => b == 3L || a == 3L })
   }
 
+  private def jaccardRows(df: org.apache.spark.sql.DataFrame) =
+    rows(df).map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+      r.getAs[Double]("jaccard"))).toSet
+
+  private def planOf(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.toString
+
   test("jaccardPairs: stats-less input skips the sizing scan, shuffle path agrees") {
-    // r12: when 2x the analyzed size estimate already exceeds the
-    // broadcast gate, the octet sizing scan is skipped and the shuffle
-    // verification path runs. A localCheckpoint'd input has no stats
-    // (LogicalRDD defaults to a huge sizeInBytes), so it exercises
-    // exactly that branch — output must match the scanned broadcast path
-    // bit-for-bit.
-    val viaBroadcast = rows(Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5))
-      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
-        r.getAs[Double]("jaccard"))).toSet
-    val statless = docs.localCheckpoint(true)
-    val viaShuffle = rows(Dedup.jaccardPairs(statless, "doc_id", "text", 3, 0.5))
-      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
-        r.getAs[Double]("jaccard"))).toSet
-    assert(viaShuffle == viaBroadcast)
+    // When 2x the analyzed size estimate already exceeds the broadcast
+    // cap, the octet sizing scan is skipped and the twin's shuffle
+    // verification runs. A frame over a bare RDD has no stats (its
+    // LogicalRDD estimates spark.sql.defaultSizeInBytes), so it exercises
+    // exactly that branch — output must match the kernel bit-for-bit. (A
+    // localCheckpoint'd frame keeps its origin's stats and would still
+    // take the kernel.)
+    val viaKernel = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
+    assert(planOf(viaKernel).contains("MapPartitions") &&
+      !planOf(viaKernel).contains("Window"), "small corpus must take the kernel")
+    val statless = spark.createDataFrame(docs.rdd, docs.schema)
+    val viaShuffle = Dedup.jaccardPairs(statless, "doc_id", "text", 3, 0.5)
+    assert(planOf(viaShuffle).contains("Window") &&
+      !planOf(viaShuffle).contains("MapPartitions"),
+      "the stats-less side must plan the twin")
+    assert(jaccardRows(viaShuffle) == jaccardRows(viaKernel))
+  }
+
+  /** Near-dup families over a shared vocabulary: exact copies, one-word
+    * edits, a header shingle a fifth of the corpus shares, unicode,
+    * short/empty/NULL text and a NULL id. */
+  private def jaccardCorpus = {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog again and again"
+    val rows = (1L to 40L).map { i =>
+      val t = (i % 5) match {
+        case 0 => s"$base today"
+        case 1 => s"$base tonight variant ${i % 3}"
+        case 2 => s"completely different content number ${i % 4} about spark shuffles"
+        case 3 => s"shared header words then unique tail $i and more ${i % 2}"
+        case _ => s"naïve café déjà-vu 東京 数据 😀 line ${i % 2}"
+      }
+      (java.lang.Long.valueOf(i), t)
+    } ++ Seq((java.lang.Long.valueOf(41L), "two words"),
+      (java.lang.Long.valueOf(42L), ""), (java.lang.Long.valueOf(43L), null: String),
+      (null: java.lang.Long, s"$base today"))
+    rows.toDF("doc_id", "text")
+  }
+
+  test("jaccardPairs: broadcast kernel equals the twin forced by gate 0") {
+    val corpus = jaccardCorpus
+    for (n <- Seq(1, 2, 3); t <- Seq(0.3, 0.5, 0.8, 1.0)) {
+      val kernel = Dedup.jaccardPairs(corpus, "doc_id", "text", n, t)
+      assert(planOf(kernel).contains("MapPartitions"), s"n=$n t=$t: kernel missing")
+      val twin = withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> "0") {
+        val tw = Dedup.jaccardPairs(corpus, "doc_id", "text", n, t)
+        assert(planOf(tw).contains("Window") && !planOf(tw).contains("MapPartitions"),
+          s"n=$n t=$t: gate 0 must plan the twin")
+        jaccardRows(tw)
+      }
+      val got = jaccardRows(kernel)
+      assert(got.nonEmpty, s"n=$n t=$t: the corpus plants pairs")
+      assert(got == twin, s"n=$n t=$t: kernel ${got -- twin} vs twin ${twin -- got}")
+    }
+  }
+
+  test("jaccardPairs: duplicate or string ids and TOCTOU growth fall to the twin") {
+    import spark.implicits._
+    val corpus = jaccardCorpus
+    val expected = jaccardRows(Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5))
+    // a duplicated id — even on an empty-text row — refuses the kernel
+    val dup = corpus.union(Seq((7L, "")).toDF("doc_id", "text"))
+    val kernelIn = dup.select(col("doc_id"),
+      graft.functions.ShingleSet.hashes(col("text"), 3))
+    assert(Dedup.jaccardKernel(kernelIn, 0.5).isEmpty)
+    val viaDup = Dedup.jaccardPairs(dup, "doc_id", "text", 3, 0.5)
+    assert(planOf(viaDup).contains("Window"), "duplicate ids must plan the twin")
+    assert(jaccardRows(viaDup) == expected)
+    // string ids dispatch to the twin, same pairs
+    val viaString = Dedup.jaccardPairs(
+      corpus.withColumn("doc_id", col("doc_id").cast("string")), "doc_id", "text", 3, 0.5)
+    assert(planOf(viaString).contains("Window"), "string ids must plan the twin")
+    // (pairs are ordered by the id type: "10" < "5" as strings)
+    assert(rows(viaString).map { r =>
+      val (a, b) = (r.getString(0).toLong, r.getString(1).toLong)
+      (math.min(a, b), math.max(a, b), r.getDouble(2))
+    }.toSet == expected)
+    // the bounded collect sees more rows than the gate → None
+    val ok = corpus.select(col("doc_id"), graft.functions.ShingleSet.hashes(col("text"), 3))
+    withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> "10") {
+      assert(Dedup.jaccardKernel(ok, 0.5).isEmpty,
+        "a 43-row collect must not pass a 10-row gate")
+    }
   }
 
   test("simhashNearDupPairs surfaces exact and near dups via band join") {
@@ -594,6 +670,48 @@ class DedupSpec extends SparkSpec {
     assert(rows(Dedup.minhashSignatures(
       Seq((0L, "a b"), (1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
       "doc_id", "text", 16, 3)).map(_.getLong(0)) == Seq(1L))
+  }
+
+  test("ShingleSetExpr matches the HOF formulation, codegen and interpreted") {
+    import spark.implicits._
+    import graft.functions.{ColumnOps, ShingleSet, TextOps}
+    val texts = Seq(null, "", "two tokens", "a b c a b c a b c a b c",
+      "  tabs\tand\nnewlines  mixed\r\nhere   runs   of    spaces ",
+      "naïve café déjà-vu ünïcödé 東京 数据 😀 emoji 𝄞 clef",
+      "the quick brown fox jumps over the lazy dog again and again today",
+      "x")
+    // invalid UTF-8 (an encoded surrogate, an overlong '/', a truncated
+    // sequence) must decode to U+FFFD exactly as Spark's split sees it
+    val invalid = spark.sparkContext.parallelize(Seq(
+        (100L, "61206220" + "63EDA080" + "2064206520C0AF2066"),
+        (101L, "F09F98802078207920E282")), 1)
+      .toDF("doc_id", "hex")
+      .select(col("doc_id"), unhex(col("hex")).cast("string").as("text"))
+    // RDD-backed frames: a local relation would be folded by the
+    // optimizer's interpreted projection and never reach generated code
+    val df = spark.sparkContext.parallelize(texts.zipWithIndex.map {
+      case (t, i) => (i.toLong, t) }, 2).toDF("doc_id", "text").union(invalid)
+    val modes = Seq(
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, confs) <- modes; n <- Seq(1, 2, 3, 5)) withConf(confs: _*) {
+      val got = rows(df.select(col("doc_id"),
+        ShingleSet.hashes(col("text"), n).as("e"),
+        sort_array(transform(TextOps.wordShingles(col("text"), n),
+          s => ColumnOps.stable64(s))).as("h")))
+      assert(got.length == texts.length + 2)
+      got.foreach { r =>
+        val (e, h) = (Option(r.getSeq[Long](1)), Option(r.getSeq[Long](2)))
+        assert(e == h, s"$mode n=$n doc ${r.getLong(0)}: expr $e != hof $h")
+        assert(e.forall(s => s == s.distinct.sorted))
+      }
+      // NULL text is NULL; short text is empty, not NULL
+      val byId = got.map(r => r.getLong(0) -> r).toMap
+      assert(byId(0L).isNullAt(1))
+      assert(byId(1L).getSeq[Long](1).isEmpty)
+    }
   }
 }
 

@@ -374,6 +374,47 @@ class PlanRegressionSpec extends SparkSpec {
       !p.contains("CartesianProduct"))
   }
 
+  test("q25: the default plan is the broadcast kernel — no Exchange, Window or SMJ") {
+    // Under the dedup row gate the prefix index is built on the driver and
+    // verification streams spark.range under one broadcast: the df
+    // aggregate, the prefix window and both set joins are gone.
+    val p = plan("q25_ngram_jaccard")
+    assert(p.contains("MapPartitions"), "jaccard kernel missing")
+    assert(!p.contains("Exchange") && !p.contains("Window") &&
+      !p.contains("SortMergeJoin"), p)
+  }
+
+  test("q25 at gate 0: the shingle-set column is never filtered; sets broadcast once") {
+    // The twin reads ShingleSetExpr once per consumer: no predicate may
+    // carry the expression below its projection (an inferred
+    // size(sh) > 0 from an inner explode would run it twice per row), and
+    // the verification set table broadcasts ONCE, its second join reusing
+    // the exchange.
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    import org.apache.spark.sql.types.ArrayType
+    val nodes = withConf(graft.core.Gates.DedupKernelMaxCorpusRows -> "0") {
+      allNodes(SparkEntry.queries("q25_ngram_jaccard")(spark, sf)
+        .queryExecution.executedPlan)
+    }
+    assert(nodes.exists(_.getClass.getSimpleName == "WindowExec"),
+      "gate 0 must plan the twin")
+    def isShingleSet(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.isInstanceOf[graft.functions.ShingleSetExpr]
+    assert(nodes.exists(_.expressions.exists(_.find(isShingleSet).isDefined)))
+    assert(!nodes.collect { case f: FilterExec => f }
+        .exists(_.condition.find(isShingleSet).isDefined),
+      "ShingleSetExpr must not be pushed into a Filter")
+    def carriesSets(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.output.exists(_.dataType.isInstanceOf[ArrayType])
+    val setBroadcasts = nodes.collect { case b: BroadcastExchangeExec if carriesSets(b) => b }
+    assert(setBroadcasts.size == 1, s"sets broadcast ${setBroadcasts.size} times")
+    assert(nodes.exists {
+      case r: ReusedExchangeExec => r.child.isInstanceOf[BroadcastExchangeExec] && carriesSets(r)
+      case _ => false
+    }, "the second set join must reuse the broadcast")
+  }
+
   test("q119/q129: pure window passes — one exchange, no join") {
     for (n <- Seq("q119_sequence_packing", "q129_rapid_repeats")) {
       val p = plan(n)
@@ -488,6 +529,11 @@ class PlanRegressionSpec extends SparkSpec {
         s"$kernel derivation must not shuffle the corpus on a key")
       assert(shuffles.size <= 1,
         s"$kernel derivation allows only the fanOut round-robin exchange")
+      // one kernel evaluation per row: the NULL-signature filter must not
+      // be pushed below the projection with the kernel inlined into it
+      assert(!nodes.collect { case f: org.apache.spark.sql.execution.FilterExec => f }
+          .exists(_.condition.find(_.getClass.getSimpleName == kernel).isDefined),
+        s"$kernel must not be evaluated inside a Filter")
     }
   }
 
