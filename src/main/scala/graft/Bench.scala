@@ -37,6 +37,23 @@ object Bench {
     if (gc) System.gc() // drive ContextCleaner (broadcast/shuffle refs)
   }
 
+  /** `v` as a JSON string literal: quote, backslash and every control
+    * char below 0x20 escaped — one raw tab or CR in free text (oracle SQL,
+    * a cpu model, JVM flags) makes a JSON reader reject the whole file. */
+  def jsonStr(v: String): String = {
+    val sb = new StringBuilder("\"")
+    v.foreach {
+      case '\\' => sb.append("\\\\")
+      case '"' => sb.append("\\\"")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append("\"").toString
+  }
+
   /** Execute a query fully, through the noop sink. */
   private def execute(spark: SparkSession, fn: Query, dir: String): Unit =
     fn(spark, dir).write.format("noop").mode("overwrite").save()
@@ -112,6 +129,10 @@ object Bench {
     // default core count reads SPARK_GRAFT_CPUS, else every processor.
     val spark = graft.core.Sessions.local(appName = "graft-bench")
     graft.core.Scratch.cleanStale()
+    // The artifact records it: an all-twins run times the scale paths.
+    val twins = graft.core.Gates.forceTwinsFromEnv(spark)
+    if (twins)
+      System.err.println("[bench] FORCE_TWINS: every gate set to 0, the twins are timed")
 
     // min-of-N: a transient CPU-contention spike during one execution (GC,
     // another process on the box) otherwise lands as that query's "cost".
@@ -192,19 +213,6 @@ object Bench {
       // alone (compare load/HW first, plans second).
       // Free-text values (cpu model, JVM flags) go through jsonStr so a
       // quote or backslash in them can't corrupt the artifact.
-      def jsonStr(v: String): String = {
-        val sb = new StringBuilder("\"")
-        v.foreach {
-          case '\\' => sb.append("\\\\")
-          case '"' => sb.append("\\\"")
-          case '\n' => sb.append("\\n")
-          case '\r' => sb.append("\\r")
-          case '\t' => sb.append("\\t")
-          case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-          case c => sb.append(c)
-        }
-        sb.append("\"").toString
-      }
       val loadavg = scala.util.Try {
         val src = scala.io.Source.fromFile("/proc/loadavg")
         try src.mkString.trim.split(" ").take(3).mkString(" ")
@@ -220,7 +228,7 @@ object Bench {
         .getRuntimeMXBean.getInputArguments.toArray
         .map(_.toString).find(_.contains("ReservedCodeCacheSize"))
         .getOrElse("default")
-      val env = s""""loadavg":${jsonStr(loadavg)},"cpu":${jsonStr(cpu)},"cores":${Runtime.getRuntime.availableProcessors},"code_cache":${jsonStr(codeCache)}"""
+      val env = s""""loadavg":${jsonStr(loadavg)},"cpu":${jsonStr(cpu)},"cores":${Runtime.getRuntime.availableProcessors},"code_cache":${jsonStr(codeCache)},"force_twins":$twins"""
       val w = new java.io.PrintWriter("BENCH_detail.json")
       // "reps_base" is the configured floor; a query's ACTUAL rep count is
       // its spread-array length (adaptive reps may add up to 2). The old

@@ -18,18 +18,14 @@ object Verify {
       appName = "graft-verify",
       cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4))
     graft.core.Scratch.cleanStale()
-    // SPARK_GRAFT_FORCE_TWINS=1: force every kernel/driver-shortcut guard
-    // to 0 so the declarative/distributed fallbacks are the PRIMARY path
-    // for the whole suite — the suite-level twin gate (round-12 judge
-    // ask). The pairwise parity specs prove each twin equals its kernel;
-    // this run proves the composed 134-query oracle surface holds when
-    // every guard declines at once (the 100 TB posture, where corpora
-    // never fit a driver collect).
-    if (sys.env.get("SPARK_GRAFT_FORCE_TWINS").contains("1")) {
-      graft.core.Gates.All.foreach(k => spark.conf.set(k, "0"))
+    // SPARK_GRAFT_FORCE_TWINS=1 (Gates.forceTwinsFromEnv): every gated
+    // operator takes its twin — the suite-level twin gate. The pairwise
+    // parity specs prove each twin equals its kernel; this run proves the
+    // composed 134-query oracle surface holds when every guard declines at
+    // once (the 100 TB posture, where corpora never fit a driver collect).
+    if (graft.core.Gates.forceTwinsFromEnv(spark))
       System.err.println("[verify] FORCE_TWINS: all driver-shortcut " +
         "guards set to 0 — declarative fallbacks are primary")
-    }
     new java.io.File(outDir).mkdirs()
     // A failing query does not stop the dump: every other query is still
     // written, then the run exits 1 naming the failures.
@@ -43,20 +39,9 @@ object Verify {
         Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jsonStr(k)}: ${Bench.jsonStr(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (failed.nonEmpty) {

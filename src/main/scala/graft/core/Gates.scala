@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *
   * One rule for every gate: the fast path runs only while the key's value
   * is positive and the input is within it. So 0 forces the twin — which is
-  * how the all-twins Verify mode (`SPARK_GRAFT_FORCE_TWINS=1`) makes every
-  * fallback primary by setting each key in [[All]] to 0. The keys are
+  * how the all-twins mode ([[forceTwinsFromEnv]]) makes every fallback
+  * primary by setting each key in [[All]] to 0. The keys are
   * shared constants so a rename on either side is a compile error, not a
   * dead conf that would certify fallbacks that never ran.
   */
@@ -82,6 +82,17 @@ object Gates {
   /** Every gate key — the set the all-twins mode forces to 0. A key gets
     * in here only together with its default. */
   val All: Seq[String] = defaults.keys.toSeq
+
+  /** The all-twins switch, read here and nowhere else: with
+    * `SPARK_GRAFT_FORCE_TWINS=1` in `env`, every key in [[All]] is set to 0
+    * on `spark`, so every gated operator runs its twin. Returns whether it
+    * did. */
+  def forceTwinsFromEnv(spark: SparkSession,
+                        env: Map[String, String] = sys.env): Boolean = {
+    val force = env.get("SPARK_GRAFT_FORCE_TWINS").contains("1")
+    if (force) All.foreach(k => spark.conf.set(k, "0"))
+    force
+  }
 
   /** The session conf wins over the default, so a whole suite can repoint
     * every gate without threading knobs through callers. */

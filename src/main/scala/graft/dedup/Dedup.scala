@@ -1,6 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ColumnOps, ShingleSet, TextOps}
@@ -9,8 +11,10 @@ import graft.functions.{ColumnOps, ShingleSet, TextOps}
   * SimHash, and n-gram Jaccard — each designed for the 100 TB shape, not the
   * 500-row test shape:
   *
-  *  - signatures are computed **per row with higher-order array functions**
-  *    (no explode → no shuffle) so the only shuffles are the ones inherent to
+  *  - signatures and shingle sets are computed **per row by codegen'd
+  *    expressions** ([[graft.functions.MinHashExpr]],
+  *    [[graft.functions.SimHash31Expr]], [[graft.functions.ShingleSetExpr]];
+  *    no explode → no shuffle) so the only shuffles are the ones inherent to
   *    the algorithm: one groupBy per LSH band bucket / inverted-index term;
   *  - candidate generation is **bucket-join**, never all-pairs: the self-join
   *    key is (band, bandHash) or shingle, so cost is Σ bucket², not n²;
@@ -50,15 +54,11 @@ object Dedup {
 
   // ---- MinHash + LSH -----------------------------------------------------
 
-  /** Universal-hash parameters for permutation i — simple affine formulas so
-    * the DuckDB oracle can restate them literally. */
-  def permA(i: Int): Long = 2L * i + 3
-  def permB(i: Int): Long = 7919L * i + 1
-
   /** MinHash signature (array of `numPerms` longs) over word-`shingleN`-gram
-    * shingles, computed entirely per-row: for each permutation, the min of
-    * (a·h31(shingle)+b) mod P over the shingle set. Null signature for docs
-    * too short to shingle. */
+    * shingles, computed entirely per-row: for each permutation i, the min of
+    * (a·h31(shingle)+b) mod P over the shingle set, with a = 2i+3 and
+    * b = 7919i+1 (affine, so the DuckDB oracle restates them literally).
+    * Null signature for docs too short to shingle. */
   def minhashSignature(text: Column, numPerms: Int, shingleN: Int): Column = {
     // Shingle hashes bound via single-element array so the md5s are computed
     // once per row, not once per permutation (HOF lambdas don't hoist
@@ -194,10 +194,10 @@ object Dedup {
     * shared ones). High-df boilerplate shingles sort to the ends and never
     * generate candidates. Candidates are then verified exactly with a
     * sorted-merge intersection count against the two full shingle sets.
-    * Candidate generation uses t−1e-6 so the 6-decimal rounding of the
-    * reported jaccard can't admit a pair the prefix bound excluded. The
-    * result is the set of pairs whose rounded jaccard reaches `threshold`,
-    * whatever global order the prefixes were cut from.
+    * Candidate generation runs at [[prefilterBound]]`(t)`, so the 6-decimal
+    * rounding of the reported jaccard can't admit a pair the prefix bound
+    * excluded. The result is the set of pairs whose rounded jaccard
+    * reaches `threshold`, whatever global order the prefixes were cut from.
     *
     * Constant-factor hardenings, each measured on an adversarially DENSE
     * corpus (50k distinct ~300-char docs over only 35k distinct shingles —
@@ -279,100 +279,141 @@ object Dedup {
     kernel.getOrElse(jaccardTwin(df, idCol, textCol, shingleN, threshold, small))
   }
 
-  /** Broadcast jaccard pair kernel — [[pairScoreKernel]]'s shape for
-    * shingle sets. The input must project exactly (id: long, sh:
-    * array<bigint> sorted distinct, i.e. [[ShingleSet.hashes]]); it is
-    * collected ONCE through the row gate's bounded collect. On the driver,
-    * in primitive arrays only: one sort of every posting gives each hash's
-    * df, a counting sort by df ranks every hash in the global (df, h)
-    * order, and each document becomes its ascending run of ranks in one
-    * CSR array — its prefix is the first ⌊(1−t)·n⌋+1 ranks, and an inverted
-    * CSR index maps each rank to the (doc, position) prefix entries that
-    * hold it. The broadcast ships those arrays; `spark.range` over
-    * document indices streams the probe side, so for each document the
-    * index lists of its prefix yield the candidates it owns ([[owns]]),
-    * the size and positional filters run as in the twin (both are
-    * symmetric in the pair), each candidate is verified once
-    * by a merge count over the two rank runs (ranks are a bijection of the
-    * hashes, so the count is the hash-set intersection), and (id_a, id_b,
-    * inter, n_a, n_b) rows with raw jaccard ≥ t−1e-6 leave the kernel.
-    * Spark's own `round(inter/(n_a+n_b−inter), 6) >= threshold` then
-    * produces the output, so rounding is shared with the twin by
-    * construction (6-dp HALF_UP moves a value by at most 5e-7, so the
-    * prefilter never drops a pair the rounded filter keeps).
+  /** The one scaffold of the broadcast kernels ([[jaccardKernel]],
+    * [[pairScoreKernel]], [[semanticDedupAccounting]]): each supplies only
+    * its driver `build` and its per-index `probe`; the steps they share
+    * live here.
+    *
+    *  - `rows` is collected ONCE through the
+    *    [[graft.core.Gates.DedupKernelMaxCorpusRows]] row gate's bounded
+    *    collect: a gate of 0, or a corpus that re-evaluates past the gate
+    *    (non-deterministic source, TOCTOU), gives None and the caller's
+    *    twin runs instead of an unbounded driver collect.
+    *  - `build` turns the collected rows into primitive-array state and the
+    *    number of probe indices, or refuses (None, the twin runs).
+    *  - The state is broadcast once, and the distributed stream is
+    *    `spark.range` over the indices: tasks ship nothing but range
+    *    bounds, the probe loop runs at range parallelism whatever the
+    *    source scan's split count, and the stream cannot diverge from the
+    *    corpus under a non-deterministic source — it IS the collected
+    *    corpus.
+    *  - `probe` runs once per partition on the broadcast value (any
+    *    per-partition scratch state lives in its closure) and gives each
+    *    index's output rows.
+    *
+    * '''Broadcast lifecycle''': the broadcast is captured by the returned
+    * plan's mapPartitions closure and must outlive it (the Dataset is lazy
+    * and re-executable), so it is NOT destroyed here. Once the caller
+    * drops the Dataset, the closure — and with it the broadcast handle —
+    * becomes unreachable and ContextCleaner reclaims the blocks at the
+    * next GC (Bench's per-query quiesce forces one; long-lived sessions
+    * get it from ordinary GC pressure). */
+  private def broadcastKernel[R, S: ClassTag, O: Encoder](rows: Dataset[R])(
+      build: Array[R] => Option[(S, Int)])(
+      probe: S => Int => IterableOnce[O]): Option[Dataset[O]] = {
+    val spark = rows.sparkSession
+    graft.core.Gates.collectWithin(rows, graft.core.Gates.DedupKernelMaxCorpusRows)
+      .flatMap(build).map { case (state, n) =>
+        val bc = spark.sparkContext.broadcast(state)
+        spark.range(n.toLong).mapPartitions { it =>
+          val at = probe(bc.value)
+          it.flatMap(i => at(i.toInt))
+        }
+      }
+  }
+
+  /** The raw-score floor of the kernels' prefilters and of the jaccard
+    * prefix cut: `threshold − 1e-6`. Every output is filtered on Spark's
+    * own `round(score, 6) >= threshold` on top, so rounding is shared with
+    * the twins by construction; 6-dp HALF_UP rounding moves a value by at
+    * most 5e-7 (+1 ulp), so no pair the rounded filter keeps is ever
+    * dropped at the floor. */
+  private def prefilterBound(threshold: Double): Double = threshold - 1e-6
+
+  /** Whether `ids` holds some value twice, by one primitive sort of
+    * `ids` in place. Callers pass a fresh array of the non-NULL ids only: a
+    * NULL id pairs with nothing, so NULL rows never collide. */
+  private def repeats(ids: Array[Long]): Boolean = {
+    java.util.Arrays.sort(ids)
+    (1 until ids.length).exists(k => ids(k) == ids(k - 1))
+  }
+
+  /** (id_a, id_b, jaccard) of (id_a, id_b, inter, n_a, n_b) pair rows
+    * whose 6-dp jaccard reaches `threshold` — the one output projection of
+    * [[jaccardKernel]] and [[jaccardTwin]]. */
+  private def roundedJaccard(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"), round(col("inter").cast("double") /
+        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
+  /** Broadcast jaccard pair kernel on [[broadcastKernel]]. The input must
+    * project exactly (id: long, sh: array<bigint> sorted distinct, i.e.
+    * [[ShingleSet.hashes]]). The build, in primitive arrays only: one sort
+    * of every posting gives each hash's df, a counting sort by df ranks
+    * every hash in the global (df, h) order, and each document becomes its
+    * ascending run of ranks in one CSR array — its prefix is the first
+    * ⌊(1−t)·n⌋+1 ranks, and an inverted CSR index maps each rank to the
+    * (doc, position) prefix entries that hold it. The probe of a document
+    * takes, from the index lists of its prefix, the candidates it owns
+    * ([[owns]]), runs the size and positional filters as in the twin (both
+    * are symmetric in the pair), verifies each candidate once by a merge
+    * count over the two rank runs (ranks are a bijection of the hashes, so
+    * the count is the hash-set intersection), and emits (id_a, id_b,
+    * inter, n_a, n_b) rows with raw jaccard ≥ [[prefilterBound]]; the
+    * output is [[roundedJaccard]] of those rows.
     *
     * Semantics are the twin's: NULL ids are dropped, and NULL, empty or
     * short text has no shingles and so no pairs. Duplicate non-NULL ids
-    * (empty-set rows included) or a collect past the gate (TOCTOU growth)
-    * → None, and the caller runs the twin: its joins pair rows, not ids.
-    *
-    * Broadcast lifecycle: as [[pairScoreKernel]]'s — captured by the
-    * returned plan's closure, reclaimed by ContextCleaner once the caller
-    * drops the DataFrame. */
+    * (empty-set rows included) → None, and the caller runs the twin: its
+    * joins pair rows, not ids. */
   private[graft] def jaccardKernel(corpus: DataFrame,
                                    threshold: Double): Option[DataFrame] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val collected = graft.core.Gates.collectWithin(
-        corpus.toDF("id", "sh").filter(col("id").isNotNull)
-          .as[(Long, Array[Long])],
-        graft.core.Gates.DedupKernelMaxCorpusRows) match {
-      case Some(rows) => rows
-      case None => return None
-    }
-    val sortedIds = collected.map(_._1)
-    java.util.Arrays.sort(sortedIds)
-    var k = 1
-    while (k < sortedIds.length) {
-      if (sortedIds(k) == sortedIds(k - 1)) return None
-      k += 1
-    }
-    val docs = collected.filter(r => r._2 != null && r._2.nonEmpty)
-    val tau = threshold - 1e-6
-    val (off, rk, idxOff, idxDoc, idxPos) = prefixIndex(docs.map(_._2), tau)
-    val bc = spark.sparkContext.broadcast(
-      (docs.map(_._1), off, rk, idxOff, idxDoc, idxPos))
-    Some(spark.range(docs.length.toLong)
-      .mapPartitions { it =>
-        val (ids, cOff, cRk, cIdxOff, cIdxDoc, cIdxPos) = bc.value
-        // mark(b) == a + 1: b is already a candidate of a
-        val mark = new Array[Int](ids.length)
-        it.flatMap { aL =>
-          val a = aL.toInt
-          val ida = ids(a)
-          val sa = cOff(a)
-          val na = cOff(a + 1) - sa
-          val pa = prefixLength(na, tau)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Int, Int)]
-          var x = 0
-          while (x < pa) {
-            val r = cRk(sa + x)
-            var e = cIdxOff(r)
-            while (e < cIdxOff(r + 1)) {
-              val b = cIdxDoc(e)
-              if (b != a && owns(ida, ids(b)) && mark(b) != a + 1) {
-                val sb = cOff(b)
-                val nb = cOff(b + 1) - sb
-                if (math.min(na, nb).toDouble >= math.max(na, nb) * tau &&
-                    (math.min(na - x - 1, nb - cIdxPos(e) - 1) + 1).toDouble *
-                      (1.0 + tau) >= (na + nb).toDouble * tau) {
-                  mark(b) = a + 1
-                  val inter = mergeCount(cRk, sa, na, sb, nb)
-                  if (inter.toDouble / (na + nb - inter).toDouble >= tau)
-                    out += ((math.min(ida, ids(b)), math.max(ida, ids(b)), inter, na, nb))
-                }
-              }
-              e += 1
-            }
-            x += 1
-          }
-          out
-        }
+    val tau = prefilterBound(threshold)
+    broadcastKernel(corpus.toDF("id", "sh").filter(col("id").isNotNull)
+        .as[(Long, Array[Long])]) { collected =>
+      if (repeats(collected.map(_._1))) None
+      else {
+        val docs = collected.filter(r => r._2 != null && r._2.nonEmpty)
+        val (off, rk, idxOff, idxDoc, idxPos) = prefixIndex(docs.map(_._2), tau)
+        Some(((docs.map(_._1), off, rk, idxOff, idxDoc, idxPos), docs.length))
       }
-      .toDF("id_a", "id_b", "inter", "n_a", "n_b")
-      .select(col("id_a"), col("id_b"), round(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold))
+    } { case (ids, off, rk, idxOff, idxDoc, idxPos) =>
+      // mark(b) == a + 1: b is already a candidate of a
+      val mark = new Array[Int](ids.length)
+      a => {
+        val ida = ids(a)
+        val sa = off(a)
+        val na = off(a + 1) - sa
+        val pa = prefixLength(na, tau)
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Int, Int)]
+        var x = 0
+        while (x < pa) {
+          val r = rk(sa + x)
+          var e = idxOff(r)
+          while (e < idxOff(r + 1)) {
+            val b = idxDoc(e)
+            if (b != a && owns(ida, ids(b)) && mark(b) != a + 1) {
+              val sb = off(b)
+              val nb = off(b + 1) - sb
+              if (math.min(na, nb).toDouble >= math.max(na, nb) * tau &&
+                  (math.min(na - x - 1, nb - idxPos(e) - 1) + 1).toDouble *
+                    (1.0 + tau) >= (na + nb).toDouble * tau) {
+                mark(b) = a + 1
+                val inter = mergeCount(rk, sa, na, sb, nb)
+                if (inter.toDouble / (na + nb - inter).toDouble >= tau)
+                  out += ((math.min(ida, ids(b)), math.max(ida, ids(b)), inter, na, nb))
+              }
+            }
+            e += 1
+          }
+          x += 1
+        }
+        out
+      }
+    }.map(pairs => roundedJaccard(pairs.toDF("id_a", "id_b", "inter", "n_a", "n_b"),
+      threshold))
   }
 
   /** Whether the document with id `ida` probes its pair with `idb` in
@@ -486,7 +527,7 @@ object Dedup {
   private[graft] def jaccardTwin(df: DataFrame, idCol: String, textCol: String,
                                  shingleN: Int, threshold: Double,
                                  broadcastSets: Boolean): DataFrame = {
-    val tau = threshold - 1e-6
+    val tau = prefilterBound(threshold)
     val sets = graft.core.Parallelize.fanOut(df)
       .select(col(idCol).as("id"), ShingleSet.hashes(col(textCol), shingleN).as("sh"))
       .select(col("id"), size(col("sh")).as("n_sh"), col("sh"))
@@ -517,16 +558,14 @@ object Dedup {
     // The sets are sorted, so verification is a fused two-pointer merge
     // count (SortedIntersectCountExpr): zero allocation per candidate pair.
     val setSide = if (broadcastSets) broadcast(sets) else sets
-    candidates
+    roundedJaccard(candidates
       .join(setSide.select(col("id").as("id_a"), col("n_sh").as("n_a"),
         col("sh").as("sh_a")), "id_a")
       .join(setSide.select(col("id").as("id_b"), col("n_sh").as("n_b"),
         col("sh").as("sh_b")), "id_b")
       .withColumn("inter",
-        graft.functions.Intersect.sortedCount(col("sh_a"), col("sh_b")))
-      .select(col("id_a"), col("id_b"), round(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+        graft.functions.Intersect.sortedCount(col("sh_a"), col("sh_b"))),
+      threshold)
   }
 
   // ---- dup-cluster resolution (connected components) ---------------------
@@ -742,34 +781,24 @@ object Dedup {
   private def kernelVec(c: Column): Column =
     transform(c, x => coalesce(x.cast("double"), lit(0.0)))
 
-  /** Broadcast-corpus pair kernel. The input must project exactly (id:
-    * long, vec: array<double>); it is collected ONCE through the
-    * [[graft.core.Gates.DedupKernelMaxCorpusRows]] row gate's bounded
-    * collect (None past it → the caller's twin) and serves both sides of
-    * the self-pairing: the broadcast carries flat (id, vector, norm)
-    * arrays, and the distributed stream is `spark.range` over row
-    * indices, so tasks ship nothing but range bounds, the pair loop runs
-    * at range parallelism independent of the source scan's split count,
-    * and the stream cannot diverge from the corpus under a
-    * non-deterministic source — it IS the collected corpus. Each row is
-    * scored in a primitive-double loop against every higher id, emitting
-    * only near-threshold pairs. The BNLJ twin is ~30× more per-pair
-    * overhead, all row plumbing: every joined pair materializes BOTH
-    * 64-double vectors into an output row (~1 KB copied per pair) before
-    * the dot runs — measured 2.38s vs 0.35s at 2k vectors and 8.0s vs
-    * 1.1s at 20k, identical rows.
+  /** Broadcast cosine pair kernel on [[broadcastKernel]]. The input must
+    * project exactly (id: long, vec: array<double>); the collected corpus
+    * serves both sides of the self-pairing: the build is flat (id, vector,
+    * norm) arrays, and each probe row is scored in a primitive-double loop
+    * against every higher id, emitting only pairs with raw cosine ≥
+    * [[prefilterBound]]. The BNLJ twin is ~30× more per-pair overhead, all
+    * row plumbing: every joined pair materializes BOTH 64-double vectors
+    * into an output row (~1 KB copied per pair) before the dot runs —
+    * measured 2.38s vs 0.35s at 2k vectors and 8.0s vs 1.1s at 20k,
+    * identical rows.
     *
     * Bit-exactness with the twin (and so with the DuckDB oracle): the
     * while-loop accumulates `s += a(i)*b(i)` in element order — the same
     * IEEE op sequence as `DotProduct`'s generated loop — norms are
     * `sqrt(seq-dot)` once per row as in the twin, the raw cosine is
-    * `dot / (na * nb)`, and the final 6-dp rounding is applied by Spark's
-    * own `round` ON TOP of the kernel output, so rounding semantics are
-    * shared by construction. The in-kernel prefilter keeps pairs with raw
-    * cosine ≥ threshold − 1e-6: 6-dp HALF_UP rounding moves a value by at
-    * most 5e-7 (+1 ulp), so no pair the rounded filter would keep is ever
-    * dropped; the exact filter then runs on the rounded column. Parity
-    * (kernel ≡ BNLJ, exact equality) is spec-gated in DedupSimilaritySpec.
+    * `dot / (na * nb)`, and Spark's own `round(cos, 6) >= threshold` makes
+    * the output. Parity (kernel ≡ BNLJ, exact equality) is spec-gated in
+    * DedupSimilaritySpec.
     *
     * '''Zero-norm semantics (defined once, all engines agree)''': a pair
     * whose norm product is ZERO (an all-zero or all-null-element vector)
@@ -787,58 +816,42 @@ object Dedup {
     * (a null id fails the `<` join condition, a null vector yields a null
     * cosine the threshold filter removes); na.drop gives the kernel the
     * same semantics instead of an encoder NPE. Null ELEMENTS are handled
-    * by [[kernelVec]] in the caller's projection.
-    *
-    * '''Broadcast lifecycle''': the broadcast is captured by the returned
-    * plan's mapPartitions closure and must outlive it (the DataFrame is
-    * lazy and re-executable), so it is NOT destroyed here. Once the
-    * caller drops the DataFrame, the closure — and with it the broadcast
-    * handle — becomes unreachable and ContextCleaner reclaims the blocks
-    * at the next GC (Bench's per-query quiesce forces one; long-lived
-    * sessions get it from ordinary GC pressure). */
+    * by [[kernelVec]] in the caller's projection. */
   private[graft] def pairScoreKernel(corpus: DataFrame,
                                      threshold: Double): Option[DataFrame] = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.core.Gates.collectWithin(
-      corpus.na.drop("any").as[(Long, Array[Double])],
-      graft.core.Gates.DedupKernelMaxCorpusRows).map { collected =>
-      val ids = collected.map(_._1)
+    val pre = prefilterBound(threshold)
+    broadcastKernel(corpus.na.drop("any").as[(Long, Array[Double])]) { collected =>
       val vecs = collected.map(_._2)
-      val norms = vecs.map(v => math.sqrt(seqDot(v, v)))
-      val bc = spark.sparkContext.broadcast((ids, vecs, norms))
-      val pre = threshold - 1e-6
-      spark.range(collected.length.toLong)
-        .mapPartitions { it =>
-          val (cIds, cVecs, cNorms) = bc.value
-          it.flatMap { iL =>
-            val i = iL.toInt
-            val ida = cIds(i)
-            val va = cVecs(i)
-            val na = cNorms(i)
-            val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-            var j = 0
-            while (j < cIds.length) {
-              if (cIds(j) > ida) {
-                val d = na * cNorms(j)
-                // d == 0 → drop (oracle's /0 = NULL); d is NaN → != 0,
-                // divide, and keep the NaN cosine (oracle keeps NaN).
-                // See the zero-norm paragraph above.
-                if (d != 0.0) {
-                  val c = seqDot(va, cVecs(j)) / d
-                  if (c >= pre || java.lang.Double.isNaN(c))
-                    out += ((ida, cIds(j), c))
-                }
-              }
-              j += 1
+      Some(((collected.map(_._1), vecs, vecs.map(v => math.sqrt(seqDot(v, v)))),
+        collected.length))
+    } { case (ids, vecs, norms) =>
+      i => {
+        val ida = ids(i)
+        val va = vecs(i)
+        val na = norms(i)
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+        var j = 0
+        while (j < ids.length) {
+          if (ids(j) > ida) {
+            val d = na * norms(j)
+            // d == 0 → drop (oracle's /0 = NULL); d is NaN → != 0,
+            // divide, and keep the NaN cosine (oracle keeps NaN).
+            // See the zero-norm paragraph above.
+            if (d != 0.0) {
+              val c = seqDot(va, vecs(j)) / d
+              if (c >= pre || java.lang.Double.isNaN(c))
+                out += ((ida, ids(j), c))
             }
-            out
           }
+          j += 1
         }
-        .toDF("id_a", "id_b", "cos_raw")
-        .select(col("id_a"), col("id_b"), round(col("cos_raw"), 6).as("cos_sim"))
-        .filter(col("cos_sim") >= threshold)
-    }
+        out
+      }
+    }.map(_.toDF("id_a", "id_b", "cos_raw")
+      .select(col("id_a"), col("id_b"), round(col("cos_raw"), 6).as("cos_sim"))
+      .filter(col("cos_sim") >= threshold))
   }
 
   /** Declarative BNLJ twin of [[pairScoreKernel]] — the fallback for
@@ -941,11 +954,11 @@ object Dedup {
         when(col("dup").isNull, lit(1)).otherwise(lit(0)).as("kept"))
   }
 
-  /** Accounting kernel over a KEYED corpus: exactly (id: long, key: long,
-    * vec: array<double>), collected through the same row gate as
-    * [[pairScoreKernel]] (whose zero-norm, bit-exactness and broadcast
-    * lifecycle notes apply verbatim), emitting one (id, key, kept) row PER
-    * INPUT ROW from a single `spark.range` job.
+  /** Accounting kernel over a KEYED corpus on [[broadcastKernel]]: exactly
+    * (id: long, key: long, vec: array<double>), under [[pairScoreKernel]]'s
+    * zero-norm and bit-exactness notes, emitting one (id, key, kept) row
+    * PER INPUT ROW: the build sorts the clean rows by key into flat
+    * arrays with each row's key-group bounds, and appends the dirty rows.
     *
     * Parity with [[semanticDedupIvfJoin]], case by case:
     *  - clean rows pair within their key group under `id_a < id_b`; the
@@ -956,73 +969,57 @@ object Dedup {
     *  - a row with a null id or null vector can neither drop nor be
     *    dropped (null ids fail the twin's join and `<`; null vectors
     *    yield null cosines its filter removes) → passthrough, kept = 1;
-    *  - duplicate non-null ids, or a collect past the gate → None, the
-    *    caller runs the twin (id-level vs row-level drop semantics — see
-    *    [[semanticDedupIvf]]). */
+    *  - duplicate non-null ids → None, the caller runs the twin (id-level
+    *    vs row-level drop semantics — see [[semanticDedupIvf]]). */
   private[graft] def semanticDedupAccounting(corpusKeyed: DataFrame,
                                              threshold: Double,
                                              idName: String): Option[DataFrame] = {
     val spark = corpusKeyed.sparkSession
     import spark.implicits._
-    val collected = graft.core.Gates.collectWithin(
-        corpusKeyed.as[(Option[Long], Option[Long], Option[Array[Double]])],
-        graft.core.Gates.DedupKernelMaxCorpusRows) match {
-      case Some(rows) => rows
-      case None => return None
-    }
-    val definedIds = collected.iterator.flatMap(_._1)
-    val seen = new java.util.HashSet[Long]()
-    while (definedIds.hasNext) // any repeated id → twin semantics differ
-      if (!seen.add(definedIds.next())) return None
-    val (clean0, dirty) = collected.partition(r =>
-      r._1.isDefined && r._2.isDefined && r._3.isDefined)
-    val clean = clean0.sortBy(_._2.get)
-    val nClean = clean.length
-    val ids = clean.map(_._1.get)
-    val keys = clean.map(_._2.get)
-    val vecs = clean.map(_._3.get)
-    val norms = vecs.map(v => math.sqrt(seqDot(v, v)))
-    val (gs, ge) = keyGroupBounds(keys)
-    val dirtyRows: Array[(Option[Long], Option[Long], Option[Double])] =
-      dirty.map(r => (r._1, r._2, None))
-    val bc = spark.sparkContext.broadcast(
-      (ids, keys, vecs, norms, gs, ge, dirtyRows))
-    val n = nClean + dirtyRows.length
-    val acc = spark.range(n.toLong)
-      .mapPartitions { it =>
-        val (cIds, cKeys, cVecs, cNorms, s0, e0, cDirty) = bc.value
-        val nc = cIds.length
-        it.map { iL =>
-          val i = iL.toInt
-          if (i >= nc) cDirty(i - nc)
-          else {
-            val ida = cIds(i)
-            val va = cVecs(i)
-            val na = cNorms(i)
-            var m = 0.0
-            var has = false
-            var j = s0(i)
-            while (j < e0(i)) {
-              if (cIds(j) < ida) {
-                val d = na * cNorms(j)
-                // d == 0 → skip (oracle's /0 = NULL pair, filtered); NaN
-                // cosine → it IS the max (NaN > every double in Spark).
-                if (d != 0.0) {
-                  val c = seqDot(va, cVecs(j)) / d
-                  if (java.lang.Double.isNaN(c)) { m = c; has = true; j = e0(i) }
-                  else if (!has || c > m) { m = c; has = true }
-                }
-              }
-              j += 1
-            }
-            (Some(ida), Some(cKeys(i)), if (has) Some(m) else None)
-          }
-        }
+    broadcastKernel(
+        corpusKeyed.as[(Option[Long], Option[Long], Option[Array[Double]])]) { collected =>
+      if (repeats(collected.flatMap(_._1))) None
+      else {
+        val (clean0, dirty) = collected.partition(r =>
+          r._1.isDefined && r._2.isDefined && r._3.isDefined)
+        val clean = clean0.sortBy(_._2.get)
+        val keys = clean.map(_._2.get)
+        val vecs = clean.map(_._3.get)
+        val (gs, ge) = keyGroupBounds(keys)
+        val dirtyRows: Array[(Option[Long], Option[Long], Option[Double])] =
+          dirty.map(r => (r._1, r._2, None))
+        Some(((clean.map(_._1.get), keys, vecs, vecs.map(v => math.sqrt(seqDot(v, v))),
+          gs, ge, dirtyRows), clean.length + dirty.length))
       }
-      .toDF(idName, "cluster_id", "cos_max")
-    Some(acc.select(col(idName), col("cluster_id"),
-      when(round(col("cos_max"), 6) >= threshold, lit(0))
-        .otherwise(lit(1)).as("kept")))
+    } { case (ids, keys, vecs, norms, gs, ge, dirtyRows) =>
+      i => Iterator.single[(Option[Long], Option[Long], Option[Double])](
+        if (i >= ids.length) dirtyRows(i - ids.length)
+        else {
+          val ida = ids(i)
+          val va = vecs(i)
+          val na = norms(i)
+          var m = 0.0
+          var has = false
+          var j = gs(i)
+          while (j < ge(i)) {
+            if (ids(j) < ida) {
+              val d = na * norms(j)
+              // d == 0 → skip (oracle's /0 = NULL pair, filtered); NaN
+              // cosine → it IS the max (NaN > every double in Spark).
+              if (d != 0.0) {
+                val c = seqDot(va, vecs(j)) / d
+                if (java.lang.Double.isNaN(c)) { m = c; has = true; j = ge(i) }
+                else if (!has || c > m) { m = c; has = true }
+              }
+            }
+            j += 1
+          }
+          (Some(ida), Some(keys(i)), if (has) Some(m) else None)
+        })
+    }.map(_.toDF(idName, "cluster_id", "cos_max")
+      .select(col(idName), col("cluster_id"),
+        when(round(col("cos_max"), 6) >= threshold, lit(0))
+          .otherwise(lit(1)).as("kept")))
   }
 
   // ---- SimHash -----------------------------------------------------------
@@ -1059,14 +1056,26 @@ object Dedup {
           .otherwise(0L))), 1)
   }
 
-  /** SimHash as a DataFrame (id, simhash) via the aggregation formulation:
-    * explode distinct tokens, hash each ONCE, then 31 conditional-sum
-    * aggregates (+1 bit set / −1 unset; bit j of the result is set iff the
-    * sum is positive, ⇔ strictly more than half the tokens set it — same
-    * decision as [[simhash31]]). Prefer this for whole-corpus runs: the
-    * per-row HOF version's md5s get inlined into every bit lambda (31×
-    * recompute), while here hashing is linear and the aggregation is a
-    * materialization barrier with map-side partial aggregation. */
+  /** Identical-signature mega-group cap shared by the simhash pair and
+    * component formulations — ONE implementation so the logged-drop
+    * discipline cannot drift between them (the two inline copies' warn
+    * texts already had). Input must already be materialized (both
+    * callers localCheckpoint the signature table). */
+  private def capSigGroups(sigs0: DataFrame, maxBucketSize: Int,
+                           what: String, consequence: String): DataFrame =
+    if (maxBucketSize == Int.MaxValue) sigs0
+    else {
+      val sizes = sigs0.groupBy(col("simhash")).agg(count(lit(1)).as("g"))
+      val dropped = sizes.filter(col("g") > maxBucketSize).count()
+      if (dropped > 0)
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"$what: dropped $dropped identical-signature group(s) " +
+            s"larger than $maxBucketSize docs (boilerplate skew guard; " +
+            s"$consequence)")
+      sigs0.join(sizes.filter(col("g") <= maxBucketSize)
+        .select(col("simhash")), "simhash")
+    }
+
   /** SimHash near-duplicate pairs, computed at the SIGNATURE level and
     * expanded back to documents. Near-dup corpora concentrate onto few
     * distinct signatures (replica groups hash identically), so doc-level
@@ -1091,31 +1100,11 @@ object Dedup {
     * C(g,2) self-pairs are exactly the junk output a boilerplate template
     * generates), with the dropped-group count logged — same explicit
     * recall trade as [[minhashCandidatePairs]]'s bucket cap. */
-  /** Identical-signature mega-group cap shared by the simhash pair and
-    * component formulations — ONE implementation so the logged-drop
-    * discipline cannot drift between them (the two inline copies' warn
-    * texts already had). Input must already be materialized (both
-    * callers localCheckpoint the signature table). */
-  private def capSigGroups(sigs0: DataFrame, maxBucketSize: Int,
-                           what: String, consequence: String): DataFrame =
-    if (maxBucketSize == Int.MaxValue) sigs0
-    else {
-      val sizes = sigs0.groupBy(col("simhash")).agg(count(lit(1)).as("g"))
-      val dropped = sizes.filter(col("g") > maxBucketSize).count()
-      if (dropped > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"$what: dropped $dropped identical-signature group(s) " +
-            s"larger than $maxBucketSize docs (boilerplate skew guard; " +
-            s"$consequence)")
-      sigs0.join(sizes.filter(col("g") <= maxBucketSize)
-        .select(col("simhash")), "simhash")
-    }
-
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int,
                           maxBucketSize: Int = Int.MaxValue): DataFrame = {
     // signatures are referenced by both stages and the distinct —
-    // materialize once (the explode+31-agg derivation is the dominant cost)
+    // materialize once (deriving them is the dominant cost)
     val sigs0 = simhashSignatures(df, idCol, textCol).localCheckpoint(true)
     val sigs = capSigGroups(sigs0, maxBucketSize, "simhashNearDupPairs",
       "pairs involving a dropped group are not generated")
@@ -1149,9 +1138,9 @@ object Dedup {
   /** [[simhashCrossPairs]] over PRE-DERIVED signature tables (id, simhash),
     * both already materialized. When the two sides partition ONE corpus
     * (the train/eval contamination shape), derive signatures once over the
-    * whole corpus and filter the sig table per side — the explode + 31-bit
-    * aggregation is the dominant cost and halves versus deriving per side
-    * (one corpus scan instead of two at warehouse scale). */
+    * whole corpus and filter the sig table per side — signature derivation
+    * is the dominant cost and halves versus deriving per side (one corpus
+    * scan instead of two at warehouse scale). */
   def simhashCrossPairsFromSigs(sl: DataFrame, sr: DataFrame,
                                 maxHamming: Int): DataFrame =
     sigPairs(sl.select(col("simhash")).distinct(),

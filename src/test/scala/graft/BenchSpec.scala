@@ -24,6 +24,12 @@ class BenchSpec extends SparkSpec {
     assert(Bench.timeQuery(spark, flaky, dir, reps = 2, warmDirs = Seq(dir)).isLeft)
   }
 
+  test("jsonStr: quote, backslash and control chars are escaped") {
+    assert(Bench.jsonStr("a\"b\\c\nd\re\tf\u0001g") ==
+      "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\"")
+    assert(Bench.jsonStr("") == "\"\"")
+  }
+
   test("selected: blank means every query, an unknown name fails loudly") {
     val all = SparkEntry.queries.keySet
     assert(SparkEntry.selected(None).map(_._1).toSet == all)

@@ -28,6 +28,16 @@ class GatesSpec extends SparkSpec {
     assert(Gates.All.toSet -- adversarial.map(_._1) == Set.empty[String])
   }
 
+  test("forceTwinsFromEnv: SPARK_GRAFT_FORCE_TWINS=1 zeroes exactly Gates.All") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(!Gates.forceTwinsFromEnv(s, Map("SPARK_GRAFT_FORCE_TWINS" -> "0")))
+    assert(!Gates.forceTwinsFromEnv(s, Map.empty))
+    assert(s.conf.getAll == before)
+    assert(Gates.forceTwinsFromEnv(s, Map("SPARK_GRAFT_FORCE_TWINS" -> "1")))
+    assert(s.conf.getAll == before ++ Gates.All.map(_ -> "0"))
+  }
+
   test("row gate: n rows fit limit n, n+1 do not, 0 runs nothing, no overflow") {
     val key = Gates.DriverEdgeLimit
     val three = Seq(1L, 2L, 3L).toDS()

@@ -70,7 +70,8 @@ class DedupSpec extends SparkSpec {
 
   /** Near-dup families over a shared vocabulary: exact copies, one-word
     * edits, a header shingle a fifth of the corpus shares, unicode,
-    * short/empty/NULL text and a NULL id. */
+    * short/empty/NULL text and two NULL ids (which the kernel's
+    * duplicate-id check must not count as a repeat). */
   private def jaccardCorpus = {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again"
@@ -85,7 +86,7 @@ class DedupSpec extends SparkSpec {
       (java.lang.Long.valueOf(i), t)
     } ++ Seq((java.lang.Long.valueOf(41L), "two words"),
       (java.lang.Long.valueOf(42L), ""), (java.lang.Long.valueOf(43L), null: String),
-      (null: java.lang.Long, s"$base today"))
+      (null: java.lang.Long, s"$base today"), (null: java.lang.Long, s"$base today"))
     rows.toDF("doc_id", "text")
   }
 
@@ -505,7 +506,9 @@ class DedupSpec extends SparkSpec {
     // argmin keeps the -1 seed: rows 5 and 7 land TOGETHER in cluster -1,
     // their pair's divisor is NaN ≠ 0, the cosine is NaN ≥ t in both
     // engines → the higher id 7 drops, 5 survives. Null-id and null-vec
-    // rows pass through kept = 1 (they fail the twin's join/filter).
+    // rows pass through kept = 1 (they fail the twin's join/filter); the
+    // two null-id rows must not count as a duplicate id, which would
+    // silently route the whole corpus to the twin.
     val rows = Seq(
       (java.lang.Long.valueOf(1L), Seq[java.lang.Double](1.0, 0.0)),
       (java.lang.Long.valueOf(2L), Seq[java.lang.Double](1.0, 0.001)),
@@ -514,7 +517,8 @@ class DedupSpec extends SparkSpec {
       (java.lang.Long.valueOf(5L), Seq[java.lang.Double](Double.NaN, 1.0)),
       (java.lang.Long.valueOf(6L), null: Seq[java.lang.Double]),
       (java.lang.Long.valueOf(7L), Seq[java.lang.Double](Double.NaN, 2.0)),
-      (null: java.lang.Long, Seq[java.lang.Double](1.0, 0.0)))
+      (null: java.lang.Long, Seq[java.lang.Double](1.0, 0.0)),
+      (null: java.lang.Long, Seq[java.lang.Double](1.0, 0.001)))
       .toDF("vec_id", "embedding")
     val centroids = Array((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)))
     val kernel = Dedup.semanticDedupIvf(rows, centroids, 0.9)
@@ -523,9 +527,9 @@ class DedupSpec extends SparkSpec {
     assert(kernel.exceptAll(twin).count() == 0L &&
       twin.exceptAll(kernel).count() == 0L)
     val kept = kernel.collect()
-      .map(r => (if (r.isNullAt(0)) -99L else r.getLong(0)) -> r.getInt(2)).toMap
-    assert(kept == Map(1L -> 1, 2L -> 0, 3L -> 1, 4L -> 1, 5L -> 1,
-      6L -> 1, 7L -> 0, -99L -> 1))
+      .map(r => (if (r.isNullAt(0)) -99L else r.getLong(0)) -> r.getInt(2))
+    assert(kept.sortBy(_._1).toSeq == Seq(-99L -> 1, -99L -> 1, 1L -> 1, 2L -> 0,
+      3L -> 1, 4L -> 1, 5L -> 1, 6L -> 1, 7L -> 0))
   }
 
   test("semanticDedupIvf: duplicate ids route to the twin's id-level semantics") {
