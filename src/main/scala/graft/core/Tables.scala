@@ -39,11 +39,11 @@ object Tables {
   }
 
   /** Physical file schema, for streaming readers that must declare one up
-    * front. Memoized on the path ALONE (footers of the immutable test
-    * tables never change, and a schema is session-independent), so the
-    * four stream queries that stage a copy of the same source file stop
-    * paying ~100 ms of listing + footer inference per invocation — they
-    * pass the SOURCE path here and apply the schema to the staged copy. */
+    * front. Memoized on the path ALONE (a schema is session-independent),
+    * so pass only immutable paths — test tables and the stream queries'
+    * staged copies of them: the four events streams, which read the same
+    * staged dir, stop paying ~100 ms of listing + footer inference per
+    * invocation. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 

@@ -15,26 +15,28 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streams {
 
-  /** File-based event stream with the events-table schema; `maxFilesPerTrigger`
-    * bounds micro-batch size (backpressure knob at scale). */
-  def readEventStream(spark: SparkSession, dir: String,
-                      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE, props STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
+  /** The events table under `readStream`: a file stream over `dir` whose
+    * schema is its files' footer (streaming needs one up front; memoized by
+    * [[graft.core.Tables.fileSchema]]), with `ts` normalized as the batch
+    * loader does it, so either physical form of events.ts streams. */
+  def readEventStream(spark: SparkSession, dir: String): DataFrame =
+    graft.core.Tables.normalizeEventTs(spark.readStream
+      .schema(graft.core.Tables.fileSchema(spark, dir)).parquet(dir))
 
-  /** Tumbling-window counts/sums per event type — the streaming twin of
-    * batch q18. Watermark bounds window state: late rows beyond it are
-    * dropped, windows older than it are finalized and evicted. */
-  def tumblingStats(events: DataFrame, window: String = "1 hour",
-                    watermark: String = "2 hours"): DataFrame =
+  /** The q18 aggregate — events per (1-hour tumbling window, event type),
+    * the count and the decimal(18,2) sum of `value` — written once for the
+    * batch query and its streaming twin. The watermark bounds window state
+    * under `readStream` (windows older than it are finalized and evicted);
+    * Spark drops it from a batch plan (EliminateEventTimeWatermark). Epoch
+    * seconds keep the oracle exact. */
+  def tumblingStats(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      .select(unix_timestamp(col("window.start")).as("window_epoch"),
+        col("event_type"), col("n_events"), col("sum_value"))
 
   /** Streaming dedup by key within the watermark horizon — the streaming
     * form of the CDC latest-per-key snapshot. State is bounded: a key's

@@ -54,7 +54,7 @@ object RunPipelines {
         }
         val mem = Streams.runToMemory(Streams.tumblingStats(Streams.readEventStream(spark, dir)), "cli_tumbling")
         println(s"streaming tumbling windows rows=${mem.count()}")
-        mem.orderBy("window").show(5, truncate = false)
+        mem.orderBy("window_epoch").show(5, truncate = false)
       case other =>
         System.err.println(s"usage: recipes|streaming, got $other"); sys.exit(2)
     }

@@ -193,19 +193,25 @@ class GatesSpec extends SparkSpec {
     } finally walk.close()
   }
 
-  private val q117 = graft.queries.StreamQueries.queries("q117_stream_dedup")
+  /** The stream queries that keep operator state: each must keep it in
+    * memory by default and commit it durably at gate 0. */
+  private val statefulStreams = Seq("q42_stream_tumbling",
+    "q62_stream_interval_join", "q77_stream_enrich", "q117_stream_dedup")
+    .map(n => n -> graft.queries.StreamQueries.queries(n))
 
   test("stream queries: zeroing the memory-store gate restores the durable provider") {
     // The provider choice is not in the plan; the checkpoint shows it.
-    val before = deltaFiles()
-    val memory = q117(spark, sf).collect().toSet
-    assert(memory.nonEmpty)
-    assert(deltaFiles() == before, "default gate must keep state in memory")
-    withConf(Gates.StreamMemoryStateStore -> "0") {
-      val durable = q117(spark, sf).collect().toSet
-      assert((deltaFiles() -- before).nonEmpty,
-        "gate=0 must commit state through the durable provider")
-      assert(durable == memory)
+    for ((name, q) <- statefulStreams) {
+      val before = deltaFiles()
+      val memory = norm(q(spark, sf))
+      assert(memory.nonEmpty, name)
+      assert(deltaFiles() == before, s"$name: default gate must keep state in memory")
+      withConf(Gates.StreamMemoryStateStore -> "0") {
+        val durable = norm(q(spark, sf))
+        assert((deltaFiles() -- before).nonEmpty,
+          s"$name: gate=0 must commit state through the durable provider")
+        assert(durable == memory, name)
+      }
     }
   }
 
@@ -286,10 +292,11 @@ class GatesSpec extends SparkSpec {
     ).map { case (n, r) => n -> r.toDF("doc_id", "text") }
   }
 
-  /** Seeded events tables for q117 (dedup on user_id, event_type), each in
-    * its own directory as the single `events.parquet` file the stream
-    * stages: empty, all-NULL keys, duplicate event ids, one hot user with
-    * unicode event types. */
+  /** Seeded events tables for the stream queries (q42 windows on ts and
+    * event_type, q62 joins on user_id, q117 dedups on user_id and
+    * event_type), each in its own directory as the single `events.parquet`
+    * file the stream stages: empty, all-NULL keys, duplicate event ids,
+    * one hot user with unicode event types. */
   private lazy val eventDirs: Seq[(String, String)] = {
     val events = spark.read.parquet(s"$sf/events.parquet").limit(40)
     Seq(
@@ -339,8 +346,12 @@ class GatesSpec extends SparkSpec {
         Dedup.jaccardPairs(_, "doc_id", "text", 2, 0.3))),
       (Gates.CorpusTfSmallInputMaxBytes, "termFrequencies", over(docFrames)(
         graft.text.Corpus.termFrequencies(_, "doc_id", "text"))),
-      (Gates.StreamMemoryStateStore, "q117_stream_dedup",
-        eventDirs.map { case (n, dir) => n -> (() => q117(spark, dir)) }))
+    ) ++ statefulStreams.collect {
+      // q77 also reads the customer table, which the seeded dirs lack
+      case (name, q) if name != "q77_stream_enrich" =>
+        (Gates.StreamMemoryStateStore, name,
+          eventDirs.map { case (n, dir) => n -> (() => q(spark, dir)) })
+    }
   }
 
   test("both sides of every gate agree on adversarial input") {

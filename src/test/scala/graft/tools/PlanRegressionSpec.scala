@@ -148,6 +148,19 @@ class PlanRegressionSpec extends SparkSpec {
       "repetition features must not introduce a keyed shuffle")
   }
 
+  test("q18: the shared tumbling aggregate plans without its watermark") {
+    // q18 and q42 run one definition (Streams.tumblingStats); on a batch
+    // input Spark drops its watermark (EliminateEventTimeWatermark),
+    // leaving q18's plain two-phase hash-agg over one scan and one exchange.
+    import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+    val qe = SparkEntry.queries("q18_tumbling_window")(spark, sf).queryExecution
+    assert(qe.optimizedPlan.collectFirst { case w: EventTimeWatermark => w }.isEmpty)
+    val p = qe.executedPlan.toString
+    assert("Exchange".r.findAllIn(p).size == 1)
+    assert("HashAggregate".r.findAllIn(p).size == 2)
+    assert("FileScan".r.findAllIn(p).size == 1)
+  }
+
   test("q81: sliding window is one Expand + two-phase hash-agg, one exchange") {
     val p = plan("q81_sliding_window")
     assert(p.contains("Expand"), "window membership should expand rows, not join")

@@ -125,23 +125,15 @@ class MemoryStateStoreSpec extends SparkSpec {
         graft.core.Scratch.tempDir("memchk").toString)
       provider.foreach(
         s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-      val src = s.readStream
-        .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-          "event_type STRING, value DOUBLE")
-        .parquet(dir.resolve("events").toString)
+      val events = dir.resolve("events").toString
       val agg = Streams.runToMemory(
-        Streams.tumblingStats(src, "1 hour", "2 hours"),
+        Streams.tumblingStats(Streams.readEventStream(s, events)),
         "m_agg_" + java.util.UUID.randomUUID.toString.replace("-", ""),
         OutputMode.Complete())
-        .select(unix_timestamp(col("window.start")).as("w"), col("event_type"),
-          col("n_events"), col("sum_value"))
         .collect().map(_.toString).toSet
-      val src2 = s.readStream
-        .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-          "event_type STRING, value DOUBLE")
-        .parquet(dir.resolve("events").toString)
       val ded = Streams.runToMemory(
-        Streams.dedupWithinWatermark(src2, Seq("user_id", "event_type"))
+        Streams.dedupWithinWatermark(Streams.readEventStream(s, events),
+            Seq("user_id", "event_type"))
           .select(col("user_id"), col("event_type")),
         "m_ded_" + java.util.UUID.randomUUID.toString.replace("-", ""),
         OutputMode.Append())
