@@ -17,8 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Signal {
 
-  private def d38(c: Column): Column = c.cast("decimal(38,0)")
-
   /** Robust (median/MAD) outliers: rows whose |y − median| exceeds
     * `thresholdBp/1e4` × 1.4826·MAD within their group. The two medians are
     * EXACT (`percentile`, full per-group sort) because the cross-engine hash

@@ -1124,23 +1124,16 @@ object Dedup {
 
   /** Cross-corpus simhash near-dup pairs — the CONTAMINATION shape: every
     * (left, right) doc pair within `maxHamming`, directionally (no `id <`
-    * triangle — eval×train is the point). Same sig-level band join +
-    * expansion as [[simhashNearDupPairs]], with equal signatures flowing
-    * through the band join (every band matches), so no separate
-    * within-group stage. Recall is perfect for maxHamming ≤ 30. */
-  def simhashCrossPairs(left: DataFrame, right: DataFrame, idCol: String,
-                        textCol: String, maxHamming: Int): DataFrame = {
-    val sl = simhashSignatures(left, idCol, textCol).localCheckpoint(true)
-    val sr = simhashSignatures(right, idCol, textCol).localCheckpoint(true)
-    simhashCrossPairsFromSigs(sl, sr, maxHamming)
-  }
-
-  /** [[simhashCrossPairs]] over PRE-DERIVED signature tables (id, simhash),
-    * both already materialized. When the two sides partition ONE corpus
-    * (the train/eval contamination shape), derive signatures once over the
-    * whole corpus and filter the sig table per side — signature derivation
-    * is the dominant cost and halves versus deriving per side (one corpus
-    * scan instead of two at warehouse scale). */
+    * triangle — eval×train is the point) — over PRE-DERIVED signature
+    * tables (id, simhash), both already materialized. Same sig-level band
+    * join + expansion as [[simhashNearDupPairs]], with equal signatures
+    * flowing through the band join (every band matches), so no separate
+    * within-group stage. Recall is perfect for maxHamming ≤ 30. When the
+    * two sides partition ONE corpus (the train/eval contamination shape),
+    * derive signatures once over the whole corpus and filter the sig table
+    * per side — signature derivation is the dominant cost and halves
+    * versus deriving per side (one corpus scan instead of two at warehouse
+    * scale). */
   def simhashCrossPairsFromSigs(sl: DataFrame, sr: DataFrame,
                                 maxHamming: Int): DataFrame =
     sigPairs(sl.select(col("simhash")).distinct(),

@@ -157,18 +157,7 @@ object ColumnOps {
   def sourceFileName: Column =
     element_at(reverse(split(input_file_name(), "/")), 1).as("spark_file_name")
 
+  /** Load time (reference: change_data_capture.py:33-42 casts the run's
+    * `now` literal; `current_timestamp()` is fixed once per query). */
   def auditTimestamp: Column = current_timestamp().as("spark_timestamp")
-
-  // ---- enrichment for SQL use ------------------------------------------
-
-  /** Make the whole surface callable from `spark.sql` text, mirroring the
-    * reference's `registerAllUDF` (ETL.py:13-19) — but as built-in
-    * compositions, not UDFs.
-    */
-  implicit class RichColumn(private val c: Column) extends AnyVal {
-    def isNullOrBlank: Column = ColumnOps.isNullOrBlank(c)
-    def nullIfBlank: Column = ColumnOps.nullIfBlank(c)
-    def singleSpace: Column = ColumnOps.singleSpace(c)
-    def isNotIn(values: Any*): Column = ColumnOps.isNotIn(c, values)
-  }
 }

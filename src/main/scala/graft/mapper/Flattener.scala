@@ -2,7 +2,7 @@ package graft.mapper
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

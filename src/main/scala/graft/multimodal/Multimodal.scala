@@ -1,8 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.Dataset
 
 /** Multimodal column handling for training-data pipelines: image/audio/video
   * payloads as opaque `binary` columns with typed metadata, processed in
@@ -26,15 +24,6 @@ object Multimodal {
   final case class MediaRecord(media_id: Long, meta: MediaMeta, content: Array[Byte])
   final case class DecodedImage(media_id: Long, width: Int, height: Int,
                                 channels: Int, features: Array[Float])
-  final case class AudioFrames(media_id: Long, sampleRate: Int, nFrames: Int,
-                               frameOffsets: Array[Long])
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("mediaType", StringType), StructField("sourceUri", StringType),
-      StructField("sizeBytes", LongType))), nullable = false),
-    StructField("content", BinaryType, nullable = true)))
 
   /** The stub boundary: deterministic fakes derived from the payload bytes,
     * so every pipeline stage downstream is fully testable. Replace each
@@ -59,30 +48,6 @@ object Multimodal {
       if (norm == 0f) out else out.map(_ / norm)
     }
 
-    /** Fake frame sampler: every `stride`-th byte offset as a "frame". */
-    def sampleFrames(bytes: Array[Byte], stride: Int): Array[Long] =
-      (0L until bytes.length.toLong by stride.toLong).toArray
-
-    /** REAL IMPLEMENTATION GOES HERE (Graphics2D / native scaler).
-      * Fake: payload truncated/padded pro-rata to the target pixel count —
-      * deterministic, size-contract-faithful (RGB byte-per-channel).
-      * Dimensions are validated up front: `w*h*3` is computed in Long and
-      * must fit an Int (a 30000×30000 request used to overflow Int and
-      * either throw NegativeArraySizeException or corrupt the pro-rata
-      * index divisor). */
-    def resizeImage(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      val targetL = w.toLong * h * 3
-      require(w > 0 && h > 0 && targetL <= Int.MaxValue,
-        s"resize target ${w}x$h exceeds byte-array bounds (w*h*3 = $targetL)")
-      val target = targetL.toInt
-      val out = new Array[Byte](target)
-      if (bytes.nonEmpty) {
-        var i = 0
-        while (i < target) { out(i) = bytes((i.toLong * bytes.length / target).toInt); i += 1 }
-      }
-      out
-    }
-
     /** Non-negative by masking the sign bit — math.abs(Long.MinValue) is
       * Long.MinValue, which used to leak negative media ids / dimensions
       * on the one-in-2^64 payload whose rolling hash lands there. */
@@ -94,10 +59,9 @@ object Multimodal {
     }
   }
 
-  /** `mediaSchema` declares `content` nullable (media whose payload fetch
-    * failed but whose metadata was kept) — every decoder entry point maps
-    * a null payload to empty bytes instead of NPE-killing the stage for
-    * one bad record: zero features, zero frames, zero-filled resize. */
+  /** `content` may be null (media whose payload fetch failed but whose
+    * metadata was kept): the decoder maps a null payload to empty bytes
+    * instead of NPE-killing the stage for one bad record (zero features). */
   private def payload(r: MediaRecord): Array[Byte] =
     if (r.content == null) Array.emptyByteArray else r.content
 
@@ -114,48 +78,5 @@ object Multimodal {
         DecodedImage(r.media_id, w, h, c, Decoders.extractFeatures(bytes, featureDim))
       }
     }
-  }
-
-  /** Resize payloads to a fixed (w, h): the standard pre-training
-    * normalization step. Output keeps the binary payload (resized), so this
-    * stage chains ahead of [[decodeImages]]; payload size becomes uniform —
-    * exactly what downstream batch shapes (and shuffle sizing) want. */
-  def resizeImages(records: Dataset[MediaRecord], w: Int, h: Int)
-      : Dataset[MediaRecord] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions(_.map { r =>
-      val resized = Decoders.resizeImage(payload(r), w, h)
-      r.copy(content = resized,
-        meta = r.meta.copy(sizeBytes = resized.length.toLong))
-    })
-  }
-
-  /** Frame-sample "video/audio" payloads. */
-  def sampleFrames(records: Dataset[MediaRecord], stride: Int = 4096)
-      : Dataset[AudioFrames] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions(_.map { r =>
-      val bytes = payload(r)
-      // ceil-div in LONG: bytes.length + stride - 1 wraps negative for
-      // payloads within stride-1 bytes of Int.MaxValue (a ~2.1 GB binary
-      // is a legal JVM array), making nFrames negative while the offsets
-      // array is correct.
-      AudioFrames(r.media_id, 16000,
-        ((bytes.length.toLong + stride - 1) / stride).toInt,
-        Decoders.sampleFrames(bytes, stride))
-    })
-  }
-
-  /** Ingest a directory of binary files as MediaRecords
-    * (`spark.read.format("binaryFile")`). */
-  def readBinaryDir(spark: SparkSession, dir: String, mediaType: String)
-      : Dataset[MediaRecord] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(dir)
-      .select(col("path"), col("length"), col("content"))
-      .map(r => MediaRecord(
-        Decoders.stableHash(r.getAs[String]("path").getBytes("UTF-8")),
-        MediaMeta(mediaType, r.getAs[String]("path"), r.getAs[Long]("length")),
-        r.getAs[Array[Byte]]("content")))
   }
 }

@@ -242,13 +242,13 @@ object AdvancedQueries {
       val empty = s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], historySchema)
       val history = (0 until 3).foldLeft(empty) { (h, i) =>
-        // LAZY checkpoint (r12): still truncates the per-batch lineage and
-        // still caches on first materialization (scd2Merge reads `h` twice
-        // — both filters hit the cached blocks), but the materialization
-        // happens inside the one final action instead of three extra
-        // eager jobs. Same non-replicated-block recovery semantics as
-        // eager. Same-session A/B (OPTIMIZATION_r12.md §6): 1.04 → 0.85s,
-        // identical 4500 rows.
+        // LAZY checkpoint (r12): truncates the per-batch lineage and caches
+        // on first use (scd2Merge reads `h` twice); block recovery as eager.
+        // Jobs by listener (warm reps, sf0.01/sf0.1, 4 cores): AQE off, the
+        // build runs 3 (broadcast builds) and the checkpoints run in the one
+        // final job; AQE on (`Sessions.local`'s default), the build runs 13
+        // (a checkpoint's RDD executes the adaptive plan's query stages) and
+        // the action 1. A/B (OPTIMIZATION_r12.md §6): 1.04 → 0.85s, 4500 rows.
         // PRECONDITION (r13 note): before h's blocks are cached, the two
         // plan branches reading it may compute its partitions
         // independently, so the lazy/eager parity holds only while

@@ -258,41 +258,6 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Multi-probe IVF search: each query is probed against its `nprobe`
-    * NEAREST centroids (not just the argmin), and scoring runs over the
-    * union of those buckets. This is the standard IVF recall knob — a query
-    * near a Voronoi boundary finds neighbors that fell on the other side.
-    * Cost scales linearly with nprobe (nprobe/nlist of the corpus is
-    * scored); recall approaches exact as nprobe → nlist. The probe list is
-    * computed per-row from the broadcast centroid literals (sort a k-element
-    * array — no shuffle), and each corpus vector lives in exactly one
-    * bucket, so no (query, neighbor) pair is scored twice. */
-  def ivfTopKProbed(assigned: DataFrame, queries: DataFrame,
-                    centroids: Array[(Long, Array[Double])], k: Int,
-                    nprobe: Int = 2,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroidLit = array(centroids.map { case (cid, v) =>
-      struct(lit(cid).as("cid"), array(v.map(lit): _*).as("cvec"))
-    }: _*)
-    val qv = toDoubleVec(col(vecCol))
-    // {d, cid} structs sort lexicographically: by distance, ties by cid
-    val scoredCentroids = transform(centroidLit,
-      cen => struct(l2sq(qv, cen.getField("cvec")).as("d"),
-        cen.getField("cid").as("cid")))
-    val probes = queries.select(col(idCol).as("query_id"), qv.as("qv"),
-        explode(slice(array_sort(scoredCentroids), 1, nprobe)).as("probe"))
-      .select(col("query_id"), col("qv"), col("probe.cid").as("qc"))
-    val c = assigned.select(col(idCol).as("neighbor_id"),
-      toDoubleVec(col(vecCol)).as("cv"), col("cluster_id"))
-    val scored = c.join(broadcast(probes),
-        col("qc") === col("cluster_id") && col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qv"), col("cv")).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   // ---- random-hyperplane LSH ----------------------------------------------
 
   /** Deterministic integer-grid hyperplanes for tests/oracles: component
@@ -320,23 +285,5 @@ object Similarity {
     planes.zipWithIndex.map { case (p, i) =>
       when(dot(vec, typedLit(p)) >= 0d, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
-  }
-
-  /** LSH-bucketed candidate pairs: only vectors sharing the full K-bit
-    * bucket are scored — the shuffle is by bucket (corpus-linear), and the
-    * quadratic blowup is confined to within-bucket groups. The scale
-    * complement to the exact all-pairs baseline; band it (multiple plane
-    * sets, union) to trade recall vs cost like MinHash-LSH. */
-  def hyperplaneCandidatePairs(df: DataFrame, idCol: String, vecCol: String,
-                               planes: Seq[Seq[Double]]): DataFrame = {
-    val b = df.select(col(idCol).as("id"), toDoubleVec(col(vecCol)).as("v"))
-      .withColumn("bucket", hyperplaneBucket(col("v"), planes))
-      .withColumn("n", norm(col("v")))
-    b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.bucket").as("bucket"),
-        cosineWithNorms(col("a.v"), col("b.v"), col("a.n"), col("b.n"))
-          .as("cos_sim"))
   }
 }

@@ -71,10 +71,8 @@ object ZipIngest {
 
   /** Member names only (reference: get_file_names_in_zip) — content bytes
     * are still streamed but dropped immediately, no row carries them. */
-  def listZipMembers(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def listZipMembers(spark: SparkSession, dir: String): DataFrame =
     readZipMembers(spark, dir).select("archive", "member", "sizeBytes").toDF()
-  }
 
   /** Inverse of [[readZipMembers]]: pack (archive, member, content) rows
     * into one `.zip` file per archive key under `dir`. Archives are built

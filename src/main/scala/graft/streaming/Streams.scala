@@ -69,7 +69,7 @@ object Streams {
   }
 
   /** Partition column of an [[upsertSink]] target: key-hash bucket. Readers
-    * that want the original schema back use [[readUpsertTarget]]. */
+    * that want the original schema back drop it. */
   val UpsertBucketCol = "_kb"
 
   /** Micro-batch CDC upsert sink (`foreachBatch`): every micro-batch merges
@@ -200,8 +200,8 @@ object Streams {
     val spark = batch0.sparkSession
     // Reserved-column guard (AsOfJoin/Ranked posture): a stream whose rows
     // legitimately carry a `_kb` column would otherwise have its values
-    // silently replaced by the key-hash bucket and dropped by
-    // readUpsertTarget — user data lost with no error.
+    // silently replaced by the key-hash bucket, which readers drop — user
+    // data lost with no error.
     require(!batch0.columns.contains(UpsertBucketCol),
       s"column '$UpsertBucketCol' is reserved by the upsert sink's bucket " +
         "layout; rename it before upserting")
@@ -271,11 +271,6 @@ object Streams {
     } finally batch.unpersist(false)
     ()
   }
-
-  /** Read an [[upsertSink]] target back with its original schema (the
-    * key-hash bucket column is an internal layout detail). */
-  def readUpsertTarget(spark: SparkSession, targetDir: String): DataFrame =
-    spark.read.parquet(targetDir).drop(UpsertBucketCol)
 
   // ---- custom state: sessionization --------------------------------------
 

@@ -1,11 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
 
 import graft.SparkEntry
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
-  * the committed plan evidence under plans/r12/.
+  * the committed plan evidence under plans/r12/ — and print one summary
+  * line per query: exchanges, broadcasts, sort-merge / shuffled-hash /
+  * nested-loop joins, whole-stage-codegen spans and scans.
   *
   * Usage: sbt "runMain graft.tools.PlanDump <outDir> <suffix> <query ...>"
   * (suffix = "before" | "after"). AQE disabled so the static plan shape
@@ -40,11 +42,25 @@ object PlanDump {
       extraConf = Map("spark.sql.adaptive.enabled" -> "false"))
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     selected.foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+      val qe = fn(spark, sfDir).queryExecution
+      val plan = qe.explainString(FormattedMode)
       val f = outDir.resolve(s"${name}_$suffix.txt")
       java.nio.file.Files.write(f, plan.getBytes("UTF-8"))
       println(s"wrote $f (${plan.length} chars)")
+      println(summary(name, qe.executedPlan))
     }
     spark.stop()
+  }
+
+  /** The summary line, over every node of the plan and its subqueries. */
+  private def summary(name: String, plan: SparkPlan): String = {
+    def nodes(p: SparkPlan): Seq[String] =
+      p.nodeName.toLowerCase +: (p.children ++ p.subqueries).flatMap(nodes)
+    val all = nodes(plan)
+    def count(part: String): Int = all.count(_.contains(part))
+    val shj = all.count(n => n.contains("hashjoin") && !n.contains("broadcast"))
+    f"$name%-24s exch=${count("exchange")}%-3d bcast=${count("broadcast")}%-3d " +
+      f"smj=${count("sortmergejoin")}%-2d shj=$shj%-2d bnlj=${count("nestedloop")}%-2d " +
+      f"codegen=${count("wholestagecodegen")}%-3d scans=${count("scan")}"
   }
 }

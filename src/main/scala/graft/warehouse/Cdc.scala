@@ -1,6 +1,6 @@
 package graft.warehouse
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,7 +22,7 @@ object Cdc {
   /** Audit columns (reference: change_data_capture.py:33-42). */
   def addAuditColumns(df: DataFrame): DataFrame = df
     .withColumn("spark_file_name", ColumnOps.sourceFileName)
-    .withColumn("spark_timestamp", current_timestamp())
+    .withColumn("spark_timestamp", ColumnOps.auditTimestamp)
 
   /** Content hash over the given columns (order-sensitive, canonical). */
   def addContentHash(df: DataFrame, cols: Seq[String],

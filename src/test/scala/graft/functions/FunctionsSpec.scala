@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -278,6 +279,79 @@ class TextOpsSpec extends SparkSpec {
       .toDF("text").select(TextOps.qualityScore(col("text")).as("q"))
     val Seq(stuffed, real) = rows(df).map(_.getDouble(0))
     assert(stuffed < real && real <= 1.0 && stuffed >= 0.0)
+  }
+
+  test("reference helpers no query calls: documented examples, NULL and blank inputs") {
+    import spark.implicits._
+    import graft.core.Sessions
+    import graft.sources.Standardize
+    // (helper, expression over string columns a/b/c, rows (a, b, c) → result)
+    val (a, b, c) = (col("a"), col("b"), col("c"))
+    val columnCases: Seq[(String, Column, Seq[((String, String, String), Any)])] = Seq(
+      ("antiTrim", ColumnOps.antiTrim(a), Seq(
+        (" this has some ", null, null) -> " thishassome ",
+        ("   ", null, null) -> "   ",
+        ("", null, null) -> "",
+        (null, null, null) -> null)),
+      ("removeNonWordCharacters", ColumnOps.removeNonWordCharacters(a), Seq(
+        ("I?like!fish>", null, null) -> "Ilikefish",
+        ("snake_case stays", null, null) -> "snake_case stays",
+        ("", null, null) -> "",
+        (null, null, null) -> null)),
+      ("isTruthy", ColumnOps.isTruthy(a), Seq(
+        ("yes", null, null) -> true,
+        ("1", null, null) -> true,
+        ("0.0", null, null) -> false,
+        ("  ", null, null) -> false,
+        ("", null, null) -> false,
+        (null, null, null) -> false)),
+      ("isNotIn", ColumnOps.isNotIn(a, Seq("x", "y")), Seq(
+        ("z", null, null) -> true,
+        ("x", null, null) -> false,
+        ("", null, null) -> true,
+        (null, null, null) -> null)),
+      // NULL bounds are unbounded; a NULL value compares to NULL
+      ("nullBetween", ColumnOps.nullBetween(a, b, c), Seq(
+        ("m", "a", "z") -> true,
+        ("m", "n", "z") -> false,
+        ("m", null, "z") -> true,
+        ("m", "n", null) -> false,
+        ("m", null, null) -> true,
+        ("", "a", "z") -> false,
+        (null, "a", "z") -> null)),
+      ("multiEquals", ColumnOps.multiEquals("x", a, b), Seq(
+        ("x", "x", null) -> true,
+        ("x", "y", null) -> false,
+        ("", "", null) -> false,
+        ("x", null, null) -> null)),
+      ("addDurations", IsoDuration.addDurations(a, b), Seq(
+        ("PT1H", "PT30M", null) -> "PT1H30M",
+        ("P1D", "PT1H", null) -> "P1DT1H",
+        ("PT7M5.086705S", "PT0S", null) -> "PT7M5.086705S",
+        ("PT", "PT", null) -> "P0D",
+        ("", "PT1M", null) -> null,
+        ("PT1H", null, null) -> null)),
+      ("toDateSafe", ColumnOps.toDateSafe(a, "yyyy-MM-dd").cast("string"), Seq(
+        ("2024-02-29", null, null) -> "2024-02-29",
+        ("2024-02-30", null, null) -> null,
+        ("", null, null) -> null,
+        (null, null, null) -> null)))
+    columnCases.foreach { case (name, expr, table) =>
+      val got = table.map(_._1).toDF("a", "b", "c").select(expr)
+        .collect().map(_.get(0)).toSeq
+      assert(got == table.map(_._2), s"$name: $got")
+    }
+    // snakeCaseColumnNames: every column renamed, blank-padded names trimmed
+    val snake = Seq((1, 2, 3, 4)).toDF("orderDate", "HTTPServer", " Unit Price ", "id")
+    assert(Standardize.snakeCaseColumnNames(snake).columns.toSeq ==
+      Seq("order_date", "http_server", "unit_price", "id"))
+    // reviseShufflePartitions: executors × cores × multiplier, on a
+    // session of its own so the shared one keeps its width
+    val own = spark.newSession()
+    Seq((2, 4, 1) -> "8", (3, 2, 4) -> "24").foreach { case ((e, k, m), want) =>
+      Sessions.reviseShufflePartitions(own, e, k, m)
+      assert(own.conf.get("spark.sql.shuffle.partitions") == want)
+    }
   }
 
   test("isFalsy covers every documented falsy rendering, ANSI-safe") {

@@ -38,14 +38,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("sampleFrames yields stride-spaced offsets") {
-    val out = rows(sampleFrames(media, stride = 100).toDF())
-    val r = out.head
-    val offsets = r.getSeq[Long](r.fieldIndex("frameOffsets"))
-    assert(offsets.zip(offsets.tail).forall { case (a, b) => b - a == 100 })
-    assert(r.getAs[Int]("nFrames") == offsets.length)
-  }
-
   test("null payloads (mediaSchema allows them) decode as empty, never NPE") {
     import spark.implicits._
     val withNull = media.collect().toSeq.take(2)
@@ -53,19 +45,6 @@ class MultimodalSpec extends SparkSpec {
       .toDS()
     val decoded = rows(decodeImages(withNull, featureDim = 8).toDF())
     assert(decoded.length == 2) // no task death on the null-payload row
-    val frames = rows(sampleFrames(withNull, stride = 64).toDF())
-    assert(frames.forall(_.getAs[Int]("nFrames") >= 0))
-    val resized = rows(resizeImages(withNull, 4, 4).toDF())
-    assert(resized.forall(_.getAs[Array[Byte]]("content").length == 4 * 4 * 3))
-  }
-
-  test("resizeImage validates dimensions before the Int byte-count overflows") {
-    intercept[IllegalArgumentException] {
-      Multimodal.Decoders.resizeImage(Array[Byte](1, 2, 3), 30000, 30000)
-    }
-    intercept[IllegalArgumentException] {
-      Multimodal.Decoders.resizeImage(Array[Byte](1), 0, 4)
-    }
   }
 
   test("stableHash is always non-negative (media ids, fake dimensions)") {
@@ -80,19 +59,5 @@ class MultimodalSpec extends SparkSpec {
   test("media schema matches the declared contract") {
     assert(media.toDF().schema("content").dataType.typeName == "binary")
     assert(media.toDF().schema("meta").dataType.typeName == "struct")
-  }
-
-  test("resizeImages normalizes every payload to the target size, metadata updated") {
-    val resized = rows(Multimodal.resizeImages(media, w = 8, h = 4).toDF())
-    resized.foreach { r =>
-      val content = r.getAs[Array[Byte]]("content")
-      assert(content.length == 8 * 4 * 3)
-      assert(r.getStruct(r.fieldIndex("meta"))
-        .getAs[Long]("sizeBytes") == 8 * 4 * 3)
-    }
-    // deterministic: same payload → same resized bytes
-    val again = rows(Multimodal.resizeImages(media, w = 8, h = 4).toDF())
-    assert(resized.map(_.getAs[Array[Byte]]("content").toSeq) ==
-      again.map(_.getAs[Array[Byte]]("content").toSeq))
   }
 }

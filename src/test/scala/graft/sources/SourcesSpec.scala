@@ -97,4 +97,20 @@ class ReadWriteSpec extends SparkSpec {
     val parts = out.rdd.mapPartitions(it => Iterator(it.size)).collect()
     assert(parts.count(_ > 0) > 1, s"hot key should span >1 partition, got ${parts.toSeq}")
   }
+
+  test("saltedKey keeps the key prefix and appends a salt in [0, buckets)") {
+    import spark.implicits._
+    val keys = Seq.tabulate(200)(i => (s"k$i", i % 3)).toDF("a", "b")
+      .select(col("a"), col("b"),
+        graft.functions.ColumnOps.saltedKey(5, col("a"), col("b")).as("key"))
+      .collect()
+    assert(keys.length == 200)
+    keys.foreach { r =>
+      val prefix = s"${r.getString(0)}~${r.getInt(1)}~"
+      val key = r.getString(2)
+      assert(key.startsWith(prefix), s"key prefix lost: $key")
+      val salt = key.stripPrefix(prefix).toInt
+      assert(salt >= 0 && salt < 5, s"salt out of range: $key")
+    }
+  }
 }

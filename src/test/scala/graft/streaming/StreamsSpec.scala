@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 
 import graft.SparkSpec
 
@@ -18,6 +18,10 @@ class StreamsSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(d)
     d
   }
+
+  /** An upsert target read back with its original schema. */
+  private def readTarget(dir: String) =
+    spark.read.parquet(dir).drop(Streams.UpsertBucketCol)
 
   test("streaming tumbling window equals the batch q18 plan") {
     val stream = Streams.readEventStream(spark, streamDir)
@@ -79,7 +83,7 @@ class StreamsSpec extends SparkSpec {
       q.processAllAvailable()
       ms.addData((1L, "a2", 2L), (3L, "c", 1L))
       q.processAllAvailable()
-      val got = Streams.readUpsertTarget(spark, target).collect()
+      val got = readTarget(target).collect()
         .map(r => r.getAs[Long]("id") -> r.getAs[String]("payload")).toMap
       assert(got == Map(1L -> "a2", 2L -> "b", 3L -> "c"))
     } finally q.stop()
@@ -125,7 +129,7 @@ class StreamsSpec extends SparkSpec {
       untouched.foreach { case (p, bytes) =>
         assert(after.contains(p) && java.util.Arrays.equals(after(p), bytes),
           s"untouched partition file changed: $p") }
-      val got = Streams.readUpsertTarget(spark, target).collect()
+      val got = readTarget(target).collect()
         .map(r => r.getAs[Long]("id") -> r.getAs[String]("payload")).toMap
       assert(got == Map(1L -> "a2", 2L -> "b", 3L -> "c"))
     } finally q.stop()
@@ -139,7 +143,7 @@ class StreamsSpec extends SparkSpec {
     val b2 = Seq((1L, "a2", 2L), (3L, "c", 1L)).toDF("id", "payload", "version")
     Streams.upsertBatch(b1, 0L, target, Seq("id"), "version", 16)
     Streams.upsertBatch(b2, 1L, target, Seq("id"), "version", 16)
-    def state() = Streams.readUpsertTarget(spark, target).collect()
+    def state() = readTarget(target).collect()
       .map(r => r.getAs[Long]("id") ->
         (r.getAs[String]("payload"), r.getAs[Long]("version"))).toMap
     val afterOnce = state()
@@ -175,7 +179,7 @@ class StreamsSpec extends SparkSpec {
     Streams.upsertBatch(
       Seq((3L, "c", 1L)).toDF("id", "payload", "version"),
       1L, target, Seq("id"), "version", 16)
-    val got = Streams.readUpsertTarget(spark, target).collect()
+    val got = readTarget(target).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("payload")).toMap
     assert(got == Map(1L -> "a", 2L -> "b", 3L -> "c"))
     assert(!fs.exists(spark, staging), "healed staging dir must be removed")
@@ -204,7 +208,7 @@ class StreamsSpec extends SparkSpec {
     Streams.upsertBatch(
       Seq((3L, "c", 1L)).toDF("id", "payload", "version"),
       1L, target, Seq("id"), "version", 16)
-    val got = Streams.readUpsertTarget(spark, target).collect()
+    val got = readTarget(target).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("payload")).toMap
     assert(got == Map(1L -> "a", 2L -> "b", 3L -> "c"))
     assert(!fs.exists(spark, staging), "healed staging dir must be removed")
@@ -232,7 +236,7 @@ class StreamsSpec extends SparkSpec {
       .coalesce(1).write.parquet(target)
     val batch = Seq((1L, "new", 2L), (3L, "c", 1L)).toDF("id", "payload", "version")
     Streams.upsertBatch(batch, 0L, target, Seq("id"), "version", 16)
-    val got = Streams.readUpsertTarget(spark, target).collect()
+    val got = readTarget(target).collect()
       .map(r => r.getAs[Long]("id") ->
         (r.getAs[String]("payload"), r.getAs[Long]("version"))).toMap
     // id=2 was ONLY in the flat history and the batch didn't touch its
@@ -245,21 +249,35 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("StreamMetrics records per-batch progress for a completed query") {
-    val recorder = StreamMetrics.attach(spark)
+    // A minimal progress listener for the probe query: batches, input rows
+    // and the latest state-row count, folded on the listener bus.
+    final class Progress extends StreamingQueryListener {
+      val batches = new java.util.concurrent.atomic.AtomicLong
+      val inputRows = new java.util.concurrent.atomic.AtomicLong
+      @volatile var stateRows = 0L
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name == "metrics_probe") {
+          inputRows.addAndGet(e.progress.numInputRows)
+          stateRows = e.progress.stateOperators.map(_.numRowsTotal).sum
+          batches.incrementAndGet()
+        }
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val progress = new Progress
+    spark.streams.addListener(progress)
     try {
       val stream = Streams.readEventStream(spark, streamDir)
       Streams.runToMemory(Streams.tumblingStats(stream), "metrics_probe")
       // listener bus is async — wait for the progress event to fold in
-      val deadline = System.currentTimeMillis() + 20000
-      var stats = recorder.snapshot.get("metrics_probe")
-      while (stats.forall(_.totalRows == 0) && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100); stats = recorder.snapshot.get("metrics_probe")
-      }
-      assert(stats.exists(_.batches >= 1), s"no progress recorded: ${recorder.snapshot}")
       val expected = graft.core.Tables.load(spark, sf, "events").count()
-      assert(stats.exists(_.totalRows == expected))
-      assert(stats.exists(_.totalStateRows > 0), "windowed agg should carry state")
-    } finally spark.streams.removeListener(recorder)
+      val deadline = System.currentTimeMillis() + 20000
+      while (progress.inputRows.get < expected && System.currentTimeMillis() < deadline)
+        Thread.sleep(100)
+      assert(progress.batches.get >= 1, "no progress recorded")
+      assert(progress.inputRows.get == expected)
+      assert(progress.stateRows > 0, "windowed agg should carry state")
+    } finally spark.streams.removeListener(progress)
   }
 
   test("upsertSink survives a mid-run kill: restart from checkpoint equals the batch oracle") {
@@ -311,7 +329,7 @@ class StreamsSpec extends SparkSpec {
         spark.read.parquet(src), Seq("id"), Seq("version"))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("payload"))
       .toMap
-    val got = Streams.readUpsertTarget(spark, target).collect()
+    val got = readTarget(target).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("payload")).toMap
     assert(got == want && want == Map(1L -> "a2", 2L -> "b", 3L -> "c"))
   }

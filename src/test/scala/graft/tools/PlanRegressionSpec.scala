@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
 
 import graft.{SparkEntry, SparkSpec, TestSession}
 
@@ -15,6 +16,10 @@ import graft.{SparkEntry, SparkSpec, TestSession}
   * keep it on.
   */
 class PlanRegressionSpec extends SparkSpec {
+
+  /** Every node of a physical plan, subqueries included. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] =
+    p +: (p.children ++ p.subqueries).flatMap(allNodes)
 
   override lazy val spark: SparkSession = {
     val s = TestSession.spark.newSession()
@@ -259,12 +264,9 @@ class PlanRegressionSpec extends SparkSpec {
     // keyed by (..., _rr_pid) — parallelism = groups × ranges — and the
     // carry window over the tiny aggregated per-(group, range) summary.
     // Assert every WindowExec is one of those two, structurally.
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
       ObjectHashAggregateExec, SortAggregateExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] =
-      p +: (p.children ++ p.subqueries).flatMap(nodes)
     // The window's DIRECT input chain (through unary nodes only) must end
     // at an aggregate — "an aggregate exists somewhere in the subtree"
     // would also accept a fact-sized window sitting above a join whose
@@ -282,7 +284,7 @@ class PlanRegressionSpec extends SparkSpec {
       val exec = forceRanged {
         SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
       }
-      val windows = nodes(exec).collect { case w: WindowExec => w }
+      val windows = allNodes(exec).collect { case w: WindowExec => w }
       assert(windows.nonEmpty, s"$q: expected the Ranked window arms")
       windows.foreach { w =>
         val ranged = w.partitionSpec.exists(_.references.exists(
@@ -329,12 +331,9 @@ class PlanRegressionSpec extends SparkSpec {
     // basket build and its generator-chain pair expansion — appears in
     // exactly ONE consumer slice, and the support/order-count sides reach
     // the pair table as broadcasts, never sort-merge.
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val df = SparkEntry.queries("q111_copurchase_lift")(spark, sf)
-    def nodes(p: SparkPlan): Seq[SparkPlan] =
-      p +: (p.children ++ p.subqueries).flatMap(nodes)
-    val executed = nodes(df.queryExecution.executedPlan)
+    val executed = allNodes(df.queryExecution.executedPlan)
     assert(!executed.exists(_.isInstanceOf[InMemoryTableScanExec]),
       "q111: bench-scale plan must not pay a cache build (size gate broken?)")
     val p = df.queryExecution.executedPlan.toString
@@ -510,10 +509,6 @@ class PlanRegressionSpec extends SparkSpec {
   }
 
   // ---- round-9 pins: the round-8 headline claims, asserted ----
-
-  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] =
-    p +: (p.children ++ p.subqueries).flatMap(allNodes)
 
   test("signature derivation is shuffle-free: MinHash/SimHash kernels sit on the scan") {
     // The round-8 headline — signatures derive at scan parallelism with

@@ -98,6 +98,22 @@ class CdcSpec extends SparkSpec {
     assert(multiCurrent == 0, "exactly one current row per key")
   }
 
+  test("addAuditColumns stamps the source file's basename and a load time") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_audit").resolve("t")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "payload").coalesce(1)
+      .write.parquet(dir.toString)
+    val file = dir.toFile.listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(file.length == 1)
+    val got = rows(Cdc.addAuditColumns(spark.read.parquet(dir.toString)))
+    assert(got.length == 2)
+    got.foreach { r =>
+      assert(r.getAs[String]("spark_file_name") == file.head)
+      assert(r.getAs[java.sql.Timestamp]("spark_timestamp") != null)
+    }
+  }
+
   test("classifyChanges tags inserts and hash-diff updates") {
     val old = Cdc.snapshot(oldDf, Seq("id"), Seq("ts"))
     val got = rows(Cdc.classifyChanges(old, newDf, Seq("id")))
